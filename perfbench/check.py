@@ -15,6 +15,7 @@ import json
 import math
 import os
 import re
+import sys
 
 import duckdb
 import numpy as np
@@ -35,9 +36,13 @@ def _close(a, b, rel=1e-9):
     return abs(a - b) <= rel * max(1.0, abs(a), abs(b))
 
 
-def _requests(outputs):
+def _requests(outputs, params, fails):
+    """The answers of the last round's timed requests, one per request."""
     with open(os.path.join(outputs, "requests.json")) as f:
-        return json.load(f)
+        answers = json.load(f)
+    _expect(fails, len(answers) == params["requests"],
+            f"{len(answers)} request answers, want {params['requests']}")
+    return answers
 
 
 # ------------------------------------------------------------------ #
@@ -209,8 +214,8 @@ def check_etl(inputs, outputs, params, fails):
     # single requests: one customer's top lines
     keys = [r[0] for r in db.execute(
         "SELECT substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12) FROM customer "
-        "ORDER BY c_custkey LIMIT 15").fetchall()]
-    for k, rows in zip(keys, _requests(outputs)):
+        "ORDER BY c_custkey LIMIT ?", [params["requests"]]).fetchall()]
+    for k, rows in zip(keys, _requests(outputs, params, fails)):
         want = db.execute("SELECT l_orderkey, l_linenumber, revenue FROM fact "
                           "WHERE customer_key = ? ORDER BY revenue DESC, "
                           "l_orderkey, l_linenumber LIMIT 10", [k]).fetchall()
@@ -331,7 +336,11 @@ def check_corpus(inputs, outputs, params, fails):
     with open(os.path.join(cin, "planted.json")) as f:
         planted = [p for p in json.load(f) if p[2] >= th]
     # every pair is caught with at least the curve's value at the
-    # threshold; allow three binomial standard deviations below it
+    # threshold; allow three binomial standard deviations below it. A
+    # floor from each pair's own curve value would be stricter, but the
+    # engine's h1 + i*h2 MinHash family falls below that one on about a
+    # quarter of the seeds (its rows are correlated), so this floor is the
+    # one every seed can be held to
     p = 1 - (1 - th ** (nh // bands)) ** bands
     hit = sum(1 for a, b, _ in planted
               if not (a in prepared and b in prepared))
@@ -412,7 +421,7 @@ def check_corpus(inputs, outputs, params, fails):
     # single lookups: LSH candidates verified at Jaccard >= threshold
     req = rows(f"SELECT doc_id, text FROM "
                f"read_parquet('{cin}/requests.parquet') ORDER BY doc_id")
-    for (i, t), got in zip(req, _requests(outputs)):
+    for (i, t), got in zip(req, _requests(outputs, params, fails)):
         s = shingle_set(t, n)
         cands = {c for k in band_keys(s, nh, bands)
                  for c in bucket.get(k, ())}
@@ -477,9 +486,10 @@ def check_retrieval(inputs, outputs, params, fails):
     ivf = hits("ivfpq", "query_id", "neighbor_id", "sim")
     recall = np.mean([len({g[0] for g in ivf.get(q, [])} & truth[q][0]) / k
                       for q in qids])
+    print(f"[check] IVF-PQ recall@{k} {recall:.3f}", file=sys.stderr)
     _expect(fails, recall >= RECALL_FLOOR,
             f"IVF-PQ recall@{k} {recall:.3f} below {RECALL_FLOOR}")
-    for q, rows in zip(qids, _requests(outputs)):
+    for q, rows in zip(qids, _requests(outputs, params, fails)):
         got = [(r["neighbor_id"], r["sim"]) for r in rows]
         want = [(g[0], g[1]) for g in ivf.get(q, [])]
         _expect(fails, got == want, f"single query {q} differs from batch")

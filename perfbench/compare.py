@@ -12,8 +12,8 @@ line each: the runner's result plus "workload" and "seed".
 for every workload and end-to-end metric of BENCHMARK.json, reports
 both medians, both spreads (quartile distance over median, from
 statistics.quantiles(n=4)) and the change of B's median against A's in
-the metric's worse direction. It fails (exit 1) when a spread other than
-setup_s exceeds the metric's bound, when B's median is worse than A's by
+the metric's worse direction. It fails (exit 1) when a spread exceeds
+the metric's bound, when B's median is worse than A's by
 more than the bound, when any run is incorrect, or when the share of
 failed operations differs between the sets.
 """
@@ -101,7 +101,7 @@ def cmd_check(a):
             if m["better"] == "higher":
                 worse = -worse
             flag = ""
-            if m["name"] != "setup_s" and max(sp) > m["bound"]:
+            if max(sp) > m["bound"]:
                 flag += " SPREAD"
             if worse > m["bound"]:
                 flag += " WORSE"

@@ -32,9 +32,9 @@ import pyarrow.parquet as pq
 # Input sizes per workload.
 SIZES = {
     "etl_star": dict(customers=1000, parts=1500, orders=10000, pages=16,
-                     per_page=200, events=80000, event_files=8),
-    "corpus_dedup": dict(docs=1200, batches=1, batch_docs=120, requests=5),
-    "retrieval": dict(docs=4000, dim=32, clusters=16, subclusters=16,
+                     per_page=200, events=40000, event_files=4),
+    "corpus_dedup": dict(docs=1200, batches=1, batch_docs=120, requests=3),
+    "retrieval": dict(docs=2000, dim=32, clusters=16, subclusters=16,
                       queries=32),
 }
 

@@ -102,7 +102,10 @@ def run_jvm(classes, args, run_dir, timeout):
     """Run the driver JVM; returns (exit code, peak RSS in MB)."""
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
+    # fixed JIT compiler threads: the driver subtracts their CPU time
+    # from its phase timings, which needs them alive for the whole run
     cmd = ["java", f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", "-XX:+UseParallelGC",
+           "-XX:-UseDynamicNumberOfCompilerThreads",
            "-Xss8m", f"-Djava.io.tmpdir={tmp}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
     for o in ADD_OPENS:
@@ -138,9 +141,9 @@ def main():
                            f"{a.workload}-{a.seed}-{a.trace}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     inputs, outputs = os.path.join(run_dir, "in"), os.path.join(run_dir, "out")
-    t0 = time.time()
+    t0, c0 = time.time(), time.process_time()
     gen.generate(a.workload, a.seed, inputs)
-    gen_s = time.time() - t0
+    gen_s, gen_cpu_s = time.time() - t0, time.process_time() - c0
 
     launch_ms = time.time() * 1000
     code, rss_mb = run_jvm(classes, [
@@ -158,13 +161,19 @@ def main():
     for e in res["errors"]:
         log("operation failed:", e)
 
+    t0 = time.time()
     failures = check.run(a.workload, inputs, outputs, res["params"])
+    check_s = time.time() - t0
     for msg in failures:
         log("CHECK FAILED:", msg)
     session_s = (res["ready_ms"] - launch_ms) / 1000.0
-    setup_s = gen_s + session_s + res["load_s"]
+    # set-up in CPU seconds, like the phases: input generation, JVM and
+    # session start, and the input load
+    setup_s = gen_cpu_s + res["ready_cpu_s"] + res["load_cpu_s"]
     log(f"rounds={res['rounds']} round_s={res['round_s']} gen_s={gen_s:.2f} "
-        f"session_s={session_s:.2f} load_s={res['load_s']:.2f} "
+        f"session_s={session_s:.2f} setup_cpu_s={gen_cpu_s:.2f}+"
+        f"{res['ready_cpu_s']:.2f}+{res['load_cpu_s']:.2f} "
+        f"check_s={check_s:.1f} total_s={time.time() - started:.1f} "
         f"checks={'ok' if not failures else len(failures)}")
 
     if a.trace:

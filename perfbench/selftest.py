@@ -24,6 +24,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 import check  # noqa: E402
+import gen  # noqa: E402
 
 
 def edit_parquet(d, fn):
@@ -94,6 +95,8 @@ CASES = {
         ("stream window count off", lambda o, i: edit_parquet(
             f"{o}/etl/stream_hourly", lambda t: set_cell(
                 t, "n_events", 0, t.column("n_events")[0].as_py() + 1))),
+        ("request answer lost", lambda o, i: edit_json(
+            f"{o}/requests.json", lambda v: v.pop())),
     ],
     "corpus_dedup": [
         ("dropped doc revived", revive_dropped),
@@ -113,8 +116,9 @@ CASES = {
     "retrieval": [
         ("exact neighbour swapped", lambda o, i: edit_parquet(
             f"{o}/retrieval/exact", lambda t: set_cell(
-                t, "neighbor_id", 0, (t.column("neighbor_id")[0].as_py()
-                                      + 1) % 4000))),
+                t, "neighbor_id", 0,
+                (t.column("neighbor_id")[0].as_py() + 1)
+                % gen.SIZES["retrieval"]["docs"]))),
         ("bm25 score off", lambda o, i: edit_parquet(
             f"{o}/retrieval/bm25_hits", lambda t: set_cell(
                 t, "score_micro", 0,

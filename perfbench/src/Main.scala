@@ -7,14 +7,13 @@ import scala.collection.mutable
   *
   *   --workload W --inputs DIR --out DIR --seconds S --trace 0|1 --cores N
   *
-  * Starts the session and loads the generated inputs three times (set-up;
-  * the median load counts), runs one warm-up round, whose outputs the
-  * checks read, then measured closed-loop rounds until S seconds have
-  * passed, at least one. A round is the workload's pipeline, its
-  * follow-up step and `w.requests` single requests (one in the
-  * warm-up), each sent after the previous one finished; the checks read
-  * the first measured round's answers. Writes `result.json` (and, traced,
-  * `spans.json`) to the output directory.
+  * Starts the session and loads the generated inputs (set-up), then
+  * runs measured closed-loop rounds until S seconds have passed, at
+  * least one. A round is the workload's pipeline, its follow-up step,
+  * one untimed request and `w.requests` timed single requests, each sent
+  * after the previous one finished. The checks read the last round's
+  * outputs and answers. Writes `result.json` (and, traced, `spans.json`)
+  * to the output directory.
   *
   * Untraced runs give the end-to-end metrics. Traced runs trace every
   * round, so their per-layer numbers describe the same rounds the
@@ -62,7 +61,8 @@ object Main {
     "streaming.events_per_s", "streaming.batch_p50_ms",
     "streaming.input_rows", "streaming.state_rows",
     "dedup.lsh_candidates", "dedup.lsh_verified", "dedup.verify_yield",
-    "similarity.index_bytes", "similarity.recall_at_10")
+    "similarity.index_bytes", "similarity.recall_at_10",
+    "similarity.search_tail_ms")
 
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) =>
@@ -81,6 +81,8 @@ object Main {
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.setCheckpointDir(s"$out/checkpoints")
     val readyMs = System.currentTimeMillis()
+    val readyCpu = Clock.cpu()
+    log("session ready")
 
     val tracer = new Tracer(spark.sparkContext, a("workload"))
     val w: Workload = a("workload") match {
@@ -88,13 +90,17 @@ object Main {
       case "corpus_dedup" => new CorpusDedup(spark, in, out, tracer)
       case "retrieval" => new Retrieval(spark, in, out, tracer)
     }
-    val loads = (1 to 3).map { i =>
-      if (i > 1) w.unload()
-      Clock.timed(w.load())._2
+    // set-up cost: CPU seconds of the one load a run makes, cold as a
+    // run pays it
+    val loadCpu = {
+      val c0 = Clock.cpu()
+      w.load()
+      Clock.cpu() - c0
     }
-    println(s"[perfbench] load_s ${loads.mkString(" ")}")
+    log(f"loaded, $loadCpu%.2f CPU s")
 
     val ops = new Ops
+    var answers = Seq.empty[Seq[Map[String, Any]]]
     /** One round: (phase values, phase seconds, request milliseconds). */
     def round(r: Int): (Map[String, Double], Seq[Double], Seq[Double]) = {
       val values = mutable.Map.empty[String, Double]
@@ -114,15 +120,16 @@ object Main {
         values ++= m; secs += s
         values("followup_cpu_s") = Clock.cpu() - c0
       }
-      val answers = mutable.ArrayBuffer.empty[Seq[Map[String, Any]]]
+      // one untimed request first: it plans and compiles the request
+      // query over the tables this round wrote
+      if (piped.isEmpty) ops.skip() else ops("request")(w.request(0))
+      val got = mutable.ArrayBuffer.empty[Seq[Map[String, Any]]]
       c0 = Clock.cpu()
-      // the warm-up round sends one request: enough to compile its plan
-      val n = if (r == 0) 1 else w.requests
-      val latencies = (0 until n).flatMap { i =>
+      val latencies = (0 until w.requests).flatMap { i =>
         if (piped.isEmpty) { ops.skip(); None }
         else ops("request") {
           val (rows, s) = Clock.timed(tracer.span("request")(w.request(i)))
-          answers += rows
+          got += rows
           s * 1e3
         }
       }
@@ -130,9 +137,8 @@ object Main {
       // round's requests resolves finer than any single request
       if (latencies.nonEmpty)
         values("request_cpu_ms") = (Clock.cpu() - c0) * 1e3 / latencies.size
-      if (r == 0 && piped.nonEmpty) w.writeChecks()
-      if (r == 1) Out.write(s"$out/requests.json", answers)
-      println(f"[perfbench] round $r phases ${secs.mkString(" ")} " +
+      answers = got.toSeq
+      log(f"round $r phases ${secs.mkString(" ")} " +
         f"requests ${latencies.sum / 1e3}%.2f")
       (values.toMap, secs.toSeq, latencies)
     }
@@ -141,9 +147,9 @@ object Main {
     val roundSecs = mutable.ArrayBuffer.empty[Double]
     val latencies = mutable.ArrayBuffer.empty[Double]
     val traced = mutable.ArrayBuffer.empty[Map[String, Double]]
-    // warm-up: the first round fills the JIT and codegen caches, and the
-    // checks read its outputs; it is not measured
-    round(0)
+    // the first round is timed as it comes: a pipeline submitted as its
+    // own application pays for class loading and code generation on
+    // every run
     val deadline = System.nanoTime() + (a("seconds").toDouble * 1e9).toLong
     tracer.setEnabled(trace)
     var r = 1
@@ -157,6 +163,11 @@ object Main {
       if (trace) traced += layerMetrics(tracer, r, values ++ w.probe())
       r += 1
     }
+    // the checks read the last measured round's outputs and answers
+    tracer.setEnabled(false)
+    if (rounds.last.contains("pipeline_cpu_s")) w.writeChecks()
+    Out.write(s"$out/requests.json", answers)
+    log("check outputs written")
     val overhead = if (!trace) Double.NaN else {
       tracer.round = r
       val pairs = (1 to OverheadPairs).map { _ =>
@@ -193,7 +204,8 @@ object Main {
     }
     Out.write(s"$out/result.json", Map(
       "ready_ms" -> readyMs,
-      "load_s" -> Stats.median(loads),
+      "ready_cpu_s" -> readyCpu,
+      "load_cpu_s" -> loadCpu,
       "rounds" -> rounds.size,
       "round_s" -> roundSecs,
       "attempted" -> ops.attempted,
@@ -201,9 +213,15 @@ object Main {
       "errors" -> ops.errors,
       "end_to_end" -> e2e,
       "per_layer" -> layer,
-      "params" -> Params.asMap))
+      "params" -> (Params.asMap + ("requests" -> w.requests))))
     spark.stop()
+    log("session stopped")
   }
+
+  /** A progress line for the run's log, stamped with the JVM's uptime. */
+  private def log(msg: String): Unit = println(f"[perfbench] ${
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime /
+      1e3}%.1f s: $msg")
 
   /** Per-layer metrics of one traced round: span durations summed per
     * name, listener counts of the counted spans, and the values the

@@ -27,10 +27,10 @@ object Params {
   val ShardBudget = 20000L
   val TopK = 10
   val NList = 32
-  val NProbe = 4
+  val NProbe = 8
   val PqBlocks = 8
   val PqCodes = 16
-  val MmrK = 5
+  val MmrK = 3
 
   def asMap: Map[String, Any] = Map(
     "shingle_n" -> ShingleN, "num_hashes" -> NumHashes, "bands" -> Bands,
@@ -54,10 +54,38 @@ object Clock {
     .getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  /** CPU seconds the whole JVM process has used so far. Unlike wall
-    * time it excludes time the host takes away from this machine.
+  /** CPU seconds the JVM process has used so far, less those of its JIT
+    * compiler threads. Unlike wall time it excludes time the host takes
+    * away from this machine; without the JIT share it does not depend
+    * on how far the compiler's background queue got in a fresh JVM.
+    * The compiler threads must live as long as the JVM (run.py turns
+    * off their dynamic creation), or their time would drop out of the
+    * subtraction.
     */
-  def cpu(): Double = os.getProcessCpuTime / 1e9
+  def cpu(): Double = os.getProcessCpuTime / 1e9 - compilerCpu()
+
+  /** CPU seconds of the JIT compiler threads, from /proc/self/task
+    * (utime + stime, in clock ticks of 10 ms).
+    */
+  private def compilerCpu(): Double = {
+    val ticks = new java.io.File("/proc/self/task").listFiles().iterator
+      .map { t =>
+        try {
+          val stat = new String(java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(t.getPath, "stat")))
+          val close = stat.lastIndexOf(')')
+          if (!stat.substring(stat.indexOf('(') + 1, close)
+              .contains("CompilerThre")) 0L
+          else {
+            // fields after the name start at field 3 (state); utime and
+            // stime are fields 14 and 15
+            val f = stat.substring(close + 2).split(" ")
+            f(11).toLong + f(12).toLong
+          }
+        } catch { case _: java.io.IOException => 0L }
+      }.sum
+    ticks / 100.0
+  }
 
   def dirBytes(path: String): Long = {
     val root = java.nio.file.Paths.get(path)
@@ -81,7 +109,6 @@ object Clock {
   */
 trait Workload {
   def load(): Unit
-  def unload(): Unit
   def pipeline(r: Int): Map[String, Double]
   def followup(r: Int): Map[String, Double]
   /** Single requests per measured round. */
@@ -110,7 +137,7 @@ final class EtlStar(s: SparkSession, in: String, out: String, t: Tracer)
   private val dir = s"$out/etl"
   private val star = s"$dir/star"
   // cheap requests: enough of them that their CPU time is not noise
-  val requests = 15
+  val requests = 8
   private var results = Map.empty[String, Any]
   private var streamView = Option.empty[String]
 
@@ -123,7 +150,6 @@ final class EtlStar(s: SparkSession, in: String, out: String, t: Tracer)
       .select(Fx.surrogateKey(col("c_custkey"))).collect()
       .map(_.getString(0)).toSeq
   }
-  def unload(): Unit = tables.values.foreach(_.unpersist(true))
 
   private def tbl(n: String) = tables(n)
   private def read(n: String) = s.read.parquet(s"$star/$n")
@@ -304,7 +330,7 @@ final class CorpusDedup(s: SparkSession, in: String, out: String, t: Tracer)
     .count(_.getName.startsWith("batch_"))
   private val dir = s"$out/corpus"
   /** As many as the inputs hold lookup documents. */
-  val requests = 5
+  val requests = 3
   private val hist = s"$dir/history"
   private val index = s"$dir/lsh_index"
 
@@ -319,7 +345,6 @@ final class CorpusDedup(s: SparkSession, in: String, out: String, t: Tracer)
     lookups = req.toSeq.map(row => s.createDataFrame(
       java.util.Arrays.asList(row), docs.select("doc_id", "text").schema))
   }
-  def unload(): Unit = (docs +: batches).foreach(_.unpersist(true))
 
   /** Raw corpus to deduplicated, split and packed shards. */
   def pipeline(r: Int): Map[String, Double] = {
@@ -433,7 +458,8 @@ final class Retrieval(s: SparkSession, in: String, out: String, t: Tracer)
   private var books: DataFrame = _
   private var cents: DataFrame = _
   private val dir = s"$out/retrieval"
-  val requests = 5
+  val requests = 3
+  private val TailQueries = 40
   private val indexTable = "perfbench_ivfpq"
   private var last: (DataFrame, DataFrame, Array[Row]) = _
 
@@ -444,12 +470,11 @@ final class Retrieval(s: SparkSession, in: String, out: String, t: Tracer)
       .select(col("qid").as("vec_id"), col("embedding"), col("text")).cache()
     corpus.count()
     val q = queries.select("vec_id", "embedding").orderBy("vec_id")
-      .limit(requests).collect()
+      .collect()
     singles = q.toSeq.map(row => s.createDataFrame(
       java.util.Arrays.asList(row), queries.select("vec_id", "embedding")
         .schema))
   }
-  def unload(): Unit = Seq(corpus, queries).foreach(_.unpersist(true))
 
   private def vecs = queries.select("vec_id", "embedding")
 
@@ -459,7 +484,7 @@ final class Retrieval(s: SparkSession, in: String, out: String, t: Tracer)
   def pipeline(r: Int): Map[String, Double] = {
     t.span("similarity.pq_train") {
       Similarity.pqTrainCodebooks(corpus, "vec_id", "embedding",
-          m = PqBlocks, k = PqCodes, iters = 2)
+          m = PqBlocks, k = PqCodes, iters = 1)
         .write.mode("overwrite").parquet(s"$dir/codebooks")
       Similarity.hashKCentroids(corpus, "vec_id", "embedding", NList)
         .write.mode("overwrite").parquet(s"$dir/centroids")
@@ -538,13 +563,21 @@ final class Retrieval(s: SparkSession, in: String, out: String, t: Tracer)
   def request(i: Int): Seq[Map[String, Any]] =
     Out.rows(dense(singles(i)).collect())
 
+  /** Exact search, recall@k of the batch IVF-PQ search against it, and
+    * the latency tail of single queries: the 75th percentile of
+    * `TailQueries` closed-loop queries, the highest percentile with ten
+    * samples beyond it.
+    */
   override def probe(): Map[String, Double] = {
     val e = t.span("similarity.exact_search") {
       exact().localCheckpoint(eager = true)
     }
     val hits = dense(vecs).select("query_id", "neighbor_id")
       .intersect(e.select("query_id", "neighbor_id")).count()
-    Map("similarity.recall_at_10" -> hits.toDouble / (queries.count() * TopK))
+    val lat = (0 until TailQueries).map(i =>
+      Clock.timed(request(i % singles.size))._2 * 1e3)
+    Map("similarity.recall_at_10" -> hits.toDouble / (queries.count() * TopK),
+      "similarity.search_tail_ms" -> Stats.quantile(lat, 0.75))
   }
 }
 
