@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * scope exit (the zero-residue form for long-lived sessions —
   * `graft.Verify` wraps each query this way); outside a scope the
   * caller owns the lifecycle (`spark.catalog.clearCache()` between
-  * batches, as `graft.Bench` does).
+  * batches).
   */
 object Dedup {
 
@@ -40,27 +40,12 @@ object Dedup {
   // Exact dedup                                                      //
   // ---------------------------------------------------------------- //
 
-  /** Keep one row per distinct normalized-text fingerprint — the
-    * first by `tieBreak` (deterministic, unlike dropDuplicates).
-    * One shuffle on the 128-bit fingerprint.
-    */
-  def exactDedup(
-      df: DataFrame, textCol: String, tieBreak: Column): DataFrame = {
-    val fp = TextAnalysis.fingerprint(col(textCol))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(fp).orderBy(tieBreak)
-    val rn = Iterator.from(0).map(i => s"__rn$i")
-      .find(n => !df.columns.contains(n)).get
-    df.withColumn(rn, row_number().over(w))
-      .where(col(rn) === 1).drop(rn)
-  }
-
-  /** [[exactDedup]] as a `min_by` AGGREGATION — result-identical when
-    * `orderCol` is unique per row, but planned as partial+final hash
-    * aggregation: the map side reduces duplicate groups before the
-    * shuffle and no per-partition sort runs. The scale default (the
-    * same trade as latest-per-group's `max_by` form); the window form
-    * stays for ordering by non-unique or multi-column tie-breaks.
+  /** Keep one row per distinct normalized-text fingerprint — the one
+    * with the lowest `orderCol` (deterministic, unlike dropDuplicates;
+    * `orderCol` must be unique per row). Planned as partial+final
+    * `min_by` hash aggregation: the map side reduces duplicate groups
+    * before the shuffle on the 128-bit fingerprint and no
+    * per-partition sort runs.
     */
   def exactDedupAgg(
       df: DataFrame, textCol: String, orderCol: String): DataFrame = {

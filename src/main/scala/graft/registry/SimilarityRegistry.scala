@@ -1670,9 +1670,10 @@ private[graft] object SimilarityRegistry {
     */
   private[graft] def annIvf(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    Similarity.ivfTopK(
-        e.where(col("vec_id") < 10), e, "vec_id", "embedding",
-        k = 10, nlist = 16, nprobe = 3)
+    val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
+    Similarity.ivfTopK(e.where(col("vec_id") < 10),
+        Similarity.annIndexRows(e, "vec_id", "embedding", cents), cents,
+        "vec_id", "embedding", k = 10, nprobe = 3)
       .select(col("query_id"), col("neighbor_id"), col("sim"),
         col("rank").cast("int").as("rank"))
       .orderBy("query_id", "rank")
@@ -1692,9 +1693,9 @@ private[graft] object SimilarityRegistry {
     // bit-for-bit; the engine DEFAULT is the bounded percentile_approx
     val cents = Similarity.kMediansCentroids(
       e, "vec_id", "embedding", k = 16, iters = 2, exactMedian = true)
-    Similarity.ivfTopKWithCentroids(
-        e.where(col("vec_id") < 10), e, "vec_id", "embedding",
-        k = 10, cents, nprobe = 3)
+    Similarity.ivfTopK(e.where(col("vec_id") < 10),
+        Similarity.annIndexRows(e, "vec_id", "embedding", cents), cents,
+        "vec_id", "embedding", k = 10, nprobe = 3)
       .select(col("query_id"), col("neighbor_id"), col("sim"),
         col("rank").cast("int").as("rank"))
       .orderBy("query_id", "rank")
@@ -1786,8 +1787,9 @@ private[graft] object SimilarityRegistry {
     val exact = Similarity.bruteForceTopKAgg(
       q, e, "vec_id", "embedding", k = 10)
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
-    val routed = Similarity.ivfTopKWithCentroids(
-      q, e, "vec_id", "embedding", k = 10, cents, nprobe = 3)
+    val routed = Similarity.ivfTopK(q,
+      Similarity.annIndexRows(e, "vec_id", "embedding", cents), cents,
+      "vec_id", "embedding", k = 10, nprobe = 3)
     Similarity.recallAudit(routed, exact).orderBy("query_id")
   }
 
@@ -1809,8 +1811,9 @@ private[graft] object SimilarityRegistry {
     val exact = Similarity.bruteForceTopKAgg(
       q, e, "vec_id", "embedding", k = 10)
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
-    val routed = Similarity.ivfTopKWithCentroids(
-      q, e, "vec_id", "embedding", k = 10, cents, nprobe = 3)
+    val routed = Similarity.ivfTopK(q,
+      Similarity.annIndexRows(e, "vec_id", "embedding", cents), cents,
+      "vec_id", "embedding", k = 10, nprobe = 3)
     Similarity.recallAudit(routed, exact).orderBy("query_id")
   }
 
@@ -2041,7 +2044,7 @@ private[graft] object SimilarityRegistry {
     * the fusion itself.
     */
   private[graft] def hybridRankFusion(s: SparkSession, dir: String): DataFrame = {
-    val cos = Similarity.bruteForceTopK(
+    val cos = Similarity.bruteForceTopKAgg(
         emb(s, dir).where(col("vec_id") < 10), emb(s, dir),
         "vec_id", "embedding", k = 20)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
@@ -2205,7 +2208,8 @@ private[graft] object SimilarityRegistry {
       .select(col("round"), col("vec_id"), col("d2_at_selection"))
       .orderBy("round")
 
-  /** MMR diverse reranking ([[Similarity.mmrRerank]]): the top-20
+  /** MMR diverse reranking ([[Similarity.mmrRerankByQuery]], one
+    * literal query key over the single candidate pool): the top-20
     * cosine candidates for audit query 0, reranked to 8 results
     * maximizing λ·relevance − (1−λ)·max-cosine-to-selected — the
     * retrieval stack's final stage, keeping near-duplicate hits from
@@ -2222,8 +2226,8 @@ private[graft] object SimilarityRegistry {
         (Similarity.norm(col("v")) * Similarity.norm(col("qv"))))
       .select(col("vec_id"), col("v"), col("rel"))
       .orderBy(col("rel").desc, col("vec_id").asc).limit(20)
-    Similarity.mmrRerank(cands, "vec_id", "v", "rel", k = 8,
-        lambdaMilli = 700)
+    Similarity.mmrRerankByQuery(cands.withColumn("__q", lit(0)), "__q",
+        "vec_id", "v", "rel", k = 8, lambdaMilli = 700)
       .select(col("rank").cast("int").as("rank"), col("vec_id"),
         round(col("rel"), 6).as("rel"),
         round(col("max_cos_prior"), 6).as("max_cos_prior"),

@@ -55,37 +55,57 @@ object Similarity {
       va: Column, vb: Column, na: Column, nb: Column): Column =
     dot(va, vb) / nullif(na * nb, lit(0.0))
 
-  /** Brute-force cosine top-k: for each query vector, the k most
-    * similar corpus vectors (self-match excluded). Ranking is by
-    * cosine rounded to `roundTo` decimals with id tie-break, making
-    * the result set reproducible across engines and runs even with
-    * floating-point summation differences.
+  /** Rank scored (query_id, neighbor_id, sim) rows to top-k per query
+    * via the bounded-heap aggregate [[graft.expressions.TopKByScore]] —
+    * partial state is k entries per (query, partition), so the shuffle
+    * carries a CONSTANT per key instead of every scored candidate, and
+    * nothing is sorted but k-element buffers. The one top-k ranking of
+    * every search here. Semantics are the window/`row_number` form's
+    * (sim DESC NULLS LAST, neighbor_id ASC): a NULL sim (zero-norm
+    * vector) enters the heap as −∞, which no rounded cosine takes,
+    * and comes back out as NULL. Ids must be integral (the heap
+    * carries them as long; the input type is restored on output).
     */
-  def bruteForceTopK(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String,
-      k: Int, roundTo: Int = 4): DataFrame = {
-    val q = broadcast(withNorm(queries, idCol, vecCol,
-      "query_id", "__qv", "__qn"))
-    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn")
-    val sims = q.crossJoin(c)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosFromNorms(col("__qv"), col("__cv"),
-          col("__qn"), col("__cn")), roundTo).as("sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+  private def rankTopK(
+      sims: DataFrame, k: Int,
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val topk = graft.expressions.TopKByScore.topK(k)
+    val nullSim = lit(Double.NegativeInfinity)
+    sims.groupBy("query_id")
+      .agg(topk(col("neighbor_id"), coalesce(col("sim"), nullSim))
+        .as("__top"))
+      .select(col("query_id"),
+        posexplode(col("__top")).as(Seq("__i", "__e")))
+      .select(col("query_id"),
+        col("__e.id").cast(idType).as("neighbor_id"),
+        when(col("__e.score") =!= nullSim, col("__e.score")).as("sim"),
+        (col("__i") + 1).as("rank"))
   }
 
-  /** Rank scored (query, neighbor, sim) rows to top-k per query via the
-    * bounded-heap aggregate [[graft.expressions.TopKByScore]] — partial
-    * state is k entries per (query, partition), so the shuffle carries a
-    * CONSTANT per key instead of every scored candidate, and nothing is
-    * sorted but k-element buffers. Output schema and ordering are
-    * identical to the window/`row_number` form (score DESC, id ASC).
+  /** The coarse probe of every IVF search: each query's `nprobe`
+    * nearest centroids by rounded cosine (`csim DESC, centroid_id
+    * ASC`). One row per (query, probed centroid): (query_id, `extra`,
+    * __qv, __qn, centroid_id, centroid_vec); callers keep what they
+    * need and the optimizer prunes the rest before the window. The
+    * window sorts nlist rows per query — a bounded group.
     */
+  private def coarseProbe(
+      queries: DataFrame, cents: DataFrame, idCol: String, vecCol: String,
+      nprobe: Int, roundTo: Int, extra: Seq[Column] = Nil): DataFrame = {
+    val centsN = broadcast(cents.select(col("centroid_id"),
+      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
+    val q = queries.select(col(idCol).as("query_id") +: extra :+
+      col(vecCol).as("__qv") :+ norm(col(vecCol)).as("__qn"): _*)
+    val pw = Window.partitionBy("query_id")
+      .orderBy(col("csim").desc, col("centroid_id").asc)
+    q.crossJoin(centsN)
+      .withColumn("csim", round(cosFromNorms(col("__qv"),
+        col("centroid_vec"), col("__qn"), col("__cn")), roundTo))
+      .withColumn("__r", row_number().over(pw))
+      .where(col("__r") <= nprobe)
+      .drop("__cn", "csim", "__r")
+  }
+
   /** ANN hard-negative mining for contrastive training: per query
     * vector, the k most-similar corpus vectors with a DIFFERENT
     * label — the wrong-class-but-embedding-confusable negatives that
@@ -94,15 +114,16 @@ object Similarity {
     * gradient). IVF-routed: each query probes its `nprobe` nearest
     * coarse buckets and scores ONLY the wrong-label members there —
     * scored rows ≈ nprobe/nlist of the corpus per query, the same
-    * bucket economics as [[ivfTopKWithCentroids]], and the label
-    * filter prunes BEFORE ranking (a same-label bucket member never
-    * reaches the window). Null-label rows pair with nothing (either
-    * side): an unlabeled row can neither need negatives nor serve as
-    * one. Self-match is excluded independently of the label test.
+    * bucket economics as [[ivfTopK]], and the label filter prunes
+    * BEFORE ranking (a same-label bucket member never reaches the
+    * window). Null-label rows pair with nothing (either side): an
+    * unlabeled row can neither need negatives nor serve as one.
+    * Self-match is excluded independently of the label test.
     * [[hardNegativesBruteForce]] is the exact reference —
     * nprobe = nlist reproduces it over identical candidates
     * (spec-pinned). Output: (query_id, query_label, neighbor_id,
-    * neighbor_label, sim, rank).
+    * neighbor_label, sim, rank). Ranked by window, not [[rankTopK]]:
+    * the heap cannot carry the label columns.
     *
     * SIZE ASSUMPTION (query side): the probed query frame — raw query
     * vectors replicated `nprobe` times — ships by an explicit
@@ -121,20 +142,8 @@ object Similarity {
       roundTo: Int = 4): DataFrame = {
     val assigned = assignWithNorm(corpus, cents, idCol, vecCol,
       roundTo, extraCols = Seq(labelCol))
-    val centsN = broadcast(cents.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(labelCol).as("query_label"), col(vecCol).as("__qv"),
-      norm(col(vecCol)).as("__qn"))
-    val probes = q.crossJoin(centsN)
-      .select(col("query_id"), col("query_label"), col("__qv"),
-        col("__qn"), col("centroid_id"),
-        round(cosFromNorms(col("__qv"), col("centroid_vec"),
-          col("__qn"), col("__cn")), roundTo).as("csim"))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    val probed = probes.withColumn("__r", row_number().over(pw))
-      .where(col("__r") <= nprobe)
+    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe,
+        roundTo, extra = Seq(col(labelCol).as("query_label")))
       .select("query_id", "query_label", "__qv", "__qn", "centroid_id")
     val bucketed = assigned.select(col("centroid_id"),
       col(idCol).as("neighbor_id"), col(labelCol).as("neighbor_label"),
@@ -181,23 +190,12 @@ object Similarity {
       .where(col("rank") <= k)
   }
 
-  private def rankTopK(
-      sims: DataFrame, k: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val topk = graft.expressions.TopKByScore.topK(k)
-    sims.groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("sim")).as("__top"))
-      .select(col("query_id"),
-        posexplode(col("__top")).as(Seq("__i", "__e")))
-      .select(col("query_id"),
-        // the aggregate carries ids as long; restore the input type
-        col("__e.id").cast(idType).as("neighbor_id"),
-        col("__e.score").as("sim"), (col("__i") + 1).as("rank"))
-  }
-
-  /** [[bruteForceTopK]] with heap-aggregate ranking ([[rankTopK]]) —
-    * result-identical (spec-checked), the scale default for large
-    * candidate sets.
+  /** Exact brute-force cosine top-k: for each query vector, the k most
+    * similar corpus vectors (self-match excluded), ranked by
+    * [[rankTopK]]. Ranking is by cosine rounded to `roundTo` decimals
+    * with id tie-break, making the result set reproducible across
+    * engines and runs even with floating-point summation differences.
+    * The query side broadcasts; the corpus never moves.
     */
   def bruteForceTopKAgg(
       queries: DataFrame, corpus: DataFrame,
@@ -403,7 +401,7 @@ object Similarity {
     * per-element join on the corpus leg. The final per-label top-k is
     * a label-partitioned window over k-bounded groups... bounded
     * because each label's candidate set is its own rows; groups are
-    * label-sized, the [[ivfTopKWithCentroids]] trade, acceptable
+    * label-sized, the [[hardNegatives]] trade, acceptable
     * because the window only RANKS (no payload carry) and labels are
     * the parallelism unit. Nulls and empty vectors are excluded up
     * front (they have no distance); a RAGGED corpus — a vector whose
@@ -472,50 +470,31 @@ object Similarity {
         "rank")
   }
 
-  /** IVF top-k search: probe the `nprobe` nearest centroids per query,
-    * then brute-force only within the probed buckets. Approximate (a
-    * true neighbor assigned to an unprobed bucket is missed) — that's
-    * the documented recall/cost trade; nprobe=nlist degrades to exact.
-    * Centroid init is [[hashKCentroids]] with a FIXED `nlist`, so the
-    * broadcast centroid table and the O(n·nlist) assignment cost are
-    * independent of corpus size.
+  /** IVF top-k search over an index frame: each query probes its
+    * `nprobe` nearest centroids ([[coarseProbe]]) and brute-forces only
+    * the index rows in those buckets, ranked by [[rankTopK]].
+    * Approximate (a true neighbor assigned to an unprobed bucket is
+    * missed) — that's the documented recall/cost trade; nprobe = nlist
+    * degrades to exactly [[bruteForceTopKAgg]].
+    *
+    * `index` rows carry (idCol, vecCol, __vn, centroid_id) —
+    * [[buildIvfIndex]]'s layout: pass `spark.table(name)` over a built
+    * index (no assignment work at query time), [[annIndexRows]] over a
+    * corpus and `cents` for a one-off search, or the streaming sink's
+    * store ([[graft.streaming.EventStreams.annIndexMaintenanceSink]]).
+    * The centroid "training" is swappable: [[hashKCentroids]] (fixed
+    * nlist, so the broadcast centroid table and the O(n·nlist)
+    * assignment cost are independent of corpus size) or
+    * [[kMediansCentroids]].
     */
   def ivfTopK(
-      queries: DataFrame, corpus: DataFrame,
+      queries: DataFrame, index: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
-      k: Int, nlist: Int, nprobe: Int,
-      roundTo: Int = 4): DataFrame =
-    ivfTopKWithCentroids(queries, corpus, idCol, vecCol, k,
-      hashKCentroids(corpus, idCol, vecCol, nlist), nprobe, roundTo)
-
-  /** [[ivfTopK]] over a caller-supplied centroid table (e.g.
-    * [[kMediansCentroids]]) — the index "training" is swappable, the
-    * search path is one code path.
-    */
-  def ivfTopKWithCentroids(
-      queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String,
-      k: Int, cents: DataFrame, nprobe: Int,
-      roundTo: Int = 4): DataFrame = {
-    val assigned = assignWithNorm(corpus, cents, idCol, vecCol, roundTo)
-    val centsN = broadcast(cents.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
-
-    // per-query probe list: nprobe nearest centroids (query set is
-    // small; per-query groups = centroid count → window sort bounded)
-    val q = withNorm(queries, idCol, vecCol, "query_id", "__qv", "__qn")
-    val probes = q.crossJoin(centsN)
-      .select(col("query_id"), col("__qv"), col("__qn"), col("centroid_id"),
-        round(cosFromNorms(col("__qv"), col("centroid_vec"),
-          col("__qn"), col("__cn")), roundTo).as("csim"))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    val probed = probes.withColumn("__r", row_number().over(pw))
-      .where(col("__r") <= nprobe)
+      k: Int, nprobe: Int, roundTo: Int = 4): DataFrame = {
+    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe, roundTo)
       .select("query_id", "__qv", "__qn", "centroid_id")
-
     // search only the probed buckets; norms reused from assignment
-    val bucketed = assigned.select(col("centroid_id"),
+    val bucketed = index.select(col("centroid_id"),
       col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
       col("__vn").as("__cn"))
     val sims = broadcast(probed).join(bucketed, Seq("centroid_id"))
@@ -523,13 +502,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         round(cosFromNorms(col("__qv"), col("__cv"),
           col("__qn"), col("__cn")), roundTo).as("sim"))
-    // probed buckets keep the candidate set small → bounded window
-    // sort; the heap-aggregate ranking ([[rankTopK]]) is the swap-in
-    // when probe buckets are huge
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    rankTopK(sims, k, index.schema(idCol).dataType)
   }
 
   /** Materialize an IVF index: the corpus with per-vector norms and
@@ -549,56 +522,6 @@ object Similarity {
       .bucketBy(numBuckets, "centroid_id")
       .saveAsTable(tableName)
     corpus.sparkSession.table(tableName).count()
-  }
-
-  /** [[ivfTopKWithCentroids]] over a prebuilt [[buildIvfIndex]] table:
-    * identical results (spec-checked), no assignment work at query
-    * time.
-    */
-  def ivfTopKOverIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, cents: DataFrame, tableName: String, nprobe: Int,
-      roundTo: Int = 4): DataFrame =
-    ivfTopKOverIndexFrame(queries, idCol, vecCol, k, cents,
-      spark.table(tableName), nprobe, roundTo)
-
-  /** [[ivfTopKOverIndex]] over an index FRAME instead of a catalog
-    * table — the search path for non-catalog index stores (the
-    * streaming maintenance sink's batch-partitioned parquet store,
-    * [[graft.streaming.EventStreams.annIndexMaintenanceSink]]).
-    * `index` rows must carry (idCol, vecCol, __vn, centroid_id) —
-    * [[buildIvfIndex]]'s layout.
-    */
-  def ivfTopKOverIndexFrame(
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, cents: DataFrame, index: DataFrame, nprobe: Int,
-      roundTo: Int = 4): DataFrame = {
-    val assigned = index
-    val centsN = broadcast(cents.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
-    val q = withNorm(queries, idCol, vecCol, "query_id", "__qv", "__qn")
-    val probes = q.crossJoin(centsN)
-      .select(col("query_id"), col("__qv"), col("__qn"), col("centroid_id"),
-        round(cosFromNorms(col("__qv"), col("centroid_vec"),
-          col("__qn"), col("__cn")), roundTo).as("csim"))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    val probed = probes.withColumn("__r", row_number().over(pw))
-      .where(col("__r") <= nprobe)
-      .select("query_id", "__qv", "__qn", "centroid_id")
-    val bucketed = assigned.select(col("centroid_id"),
-      col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      col("__vn").as("__cn"))
-    val sims = broadcast(probed).join(bucketed, Seq("centroid_id"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosFromNorms(col("__qv"), col("__cv"),
-          col("__qn"), col("__cn")), roundTo).as("sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
   }
 
   /** One batch's index rows in the standing store's layout — the
@@ -630,7 +553,7 @@ object Similarity {
     * enforces bucket-spec compatibility on append). At fixed
     * centroids the appended index is row-identical to a from-scratch
     * rebuild over the unioned corpus (spec-pinned), so readers —
-    * [[ivfTopKOverIndex]] — need no special handling. Centroids
+    * [[ivfTopK]] — need no special handling. Centroids
     * drift as batches accumulate; [[ivfDriftReport]] is the
     * re-center trigger. Returns the appended row count.
     */
@@ -1055,9 +978,7 @@ object Similarity {
     // feeds the init join and iters assignment passes)
     val exploded = graft.core.CacheScope.disk(
       train.select(col(idCol),
-        posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
-          slice(v, b * sub + lit(1), lit(sub))))
-          .as(Seq("__blk", "__sub"))))
+        subBlocks(v, m, sub).as(Seq("__blk", "__sub"))))
     // per-block hash init = the SAME k hash-lowest ids every block
     // (hashKCentroids orders by md5(id), independent of the vector)
     val initIds = train
@@ -1122,14 +1043,10 @@ object Similarity {
       codebooks: DataFrame): DataFrame = {
     val cb = broadcast(codebooks.select(col("block"), col("code"),
       col("codeword"), dot(col("codeword"), col("codeword")).as("__cc")))
-    val m = codebooks.select(max("block")).head().getInt(0) + 1
-    val dim = vectorDim(df, vecCol)
-    require(dim % m == 0, s"dim $dim must be divisible by m = $m")
-    val sub = dim / m
+    val (m, sub) = pqLayout(codebooks, df, vecCol)
     val v = col(vecCol).cast("array<double>")
     val exploded = df.select(col(idCol),
-      posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
-        slice(v, b * sub + lit(1), lit(sub)))).as(Seq("__blk", "__sub")))
+      subBlocks(v, m, sub).as(Seq("__blk", "__sub")))
     // ‖x_b − c‖² = x·x − 2 x·c + c·c; x·x is constant per (row, block)
     // → argmin needs only c·c − 2 x·c
     val d2 = col("__cc") - lit(2.0) * dot(col("__sub"), col("codeword"))
@@ -1185,35 +1102,15 @@ object Similarity {
       queries: DataFrame, encoded: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, k: Int,
       roundTo: Int = 4): DataFrame = {
-    val m = codebooks.select(max("block")).head().getInt(0) + 1
-    val dim = vectorDim(queries, vecCol)
-    require(dim % m == 0, s"dim $dim must be divisible by m = $m")
-    val sub = dim / m
-    val qv = col(vecCol).cast("array<double>")
-    // per-(query, block, code): dot contribution + codeword norm²
-    val qBlocks = queries.select(col(idCol).as("query_id"),
-      norm(qv).as("__qn"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
-        slice(qv, b * sub + lit(1), lit(sub)))).as(Seq("__blk", "__qsub")))
-    val lut = broadcast(qBlocks
-      .join(broadcast(codebooks), col("__blk") === col("block"))
-      .select(col("query_id"), col("__qn"), col("block"), col("code"),
-        dot(col("__qsub"), col("codeword")).as("__dq"),
-        dot(col("codeword"), col("codeword")).as("__cc")))
+    val (_, _, lut) = adcTable(queries, codebooks, idCol, vecCol)
     val corpusCodes = encoded.select(col(idCol).as("neighbor_id"),
       posexplode(col("codes")).as(Seq("__blk", "__code")))
-    // block contributions fold LEFT-TO-RIGHT in block order — a plain
-    // sum() aggregates in arrival order and can differ from a fixed
-    // summation by an ulp, which a cross-engine compare would see
-    def foldParts(field: String) = aggregate(
-      transform(col("__parts"), p => p.getField(field)),
-      lit(0.0), (acc, x) => acc + x)
     val sims = corpusCodes
       .join(lut, col("__blk") === col("block") &&
         col("__code") === col("code"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("__blk").as("b"),
-          col("__dq").as("dq"), col("__cc").as("cc")))).as("__parts"),
+      .groupBy(col("__lq").as("query_id"), col("neighbor_id"))
+      .agg(blockParts(col("__blk"), "dq" -> col("__dq"),
+          "cc" -> col("__cc")),
         first(col("__qn")).as("__qn1"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -1222,6 +1119,60 @@ object Similarity {
           .as("sim"))
     rankTopK(sims, k, encoded.schema(idCol).dataType)
   }
+
+  /** `v` split into `m` consecutive `sub`-wide blocks, exploded as
+    * (block index, sub-vector) — the PQ sub-space layout.
+    */
+  private def subBlocks(v: Column, m: Int, sub: Int): Column =
+    posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
+      slice(v, b * sub + lit(1), lit(sub))))
+
+  /** PQ layout: the block count `m` (from the codebooks) and the
+    * sub-block width (from `df`'s vector dimension) — two one-row
+    * actions.
+    */
+  private def pqLayout(
+      codebooks: DataFrame, df: DataFrame, vecCol: String): (Int, Int) = {
+    val m = codebooks.select(max("block")).head().getInt(0) + 1
+    val dim = vectorDim(df, vecCol)
+    require(dim % m == 0, s"dim $dim must be divisible by m = $m")
+    (m, dim / m)
+  }
+
+  /** The per-(query, block, code) ADC lookup table of every PQ search:
+    * (__lq, __qn, block, code, __dq = dot(q_b, cw), __cc = ‖cw‖²) —
+    * queries·m·k rows, broadcast. Returns (m, sub-block width, table).
+    */
+  private def adcTable(
+      queries: DataFrame, codebooks: DataFrame,
+      idCol: String, vecCol: String): (Int, Int, DataFrame) = {
+    val (m, sub) = pqLayout(codebooks, queries, vecCol)
+    val qv = col(vecCol).cast("array<double>")
+    val lut = broadcast(queries
+      .select(col(idCol).as("__lq"), norm(qv).as("__qn"),
+        subBlocks(qv, m, sub).as(Seq("__blk", "__qsub")))
+      .join(broadcast(codebooks), col("__blk") === col("block"))
+      .select(col("__lq"), col("__qn"), col("block"), col("code"),
+        dot(col("__qsub"), col("codeword")).as("__dq"),
+        dot(col("codeword"), col("codeword")).as("__cc")))
+    (m, sub, lut)
+  }
+
+  /** A (query, neighbor) group's per-block ADC terms as `__parts`,
+    * sorted by block (`b`), ready for [[foldParts]].
+    */
+  private def blockParts(block: Column, fields: (String, Column)*): Column =
+    array_sort(collect_list(struct(block.as("b") +:
+      fields.map { case (n, c) => c.as(n) }: _*))).as("__parts")
+
+  /** Sum one field of `__parts` LEFT-TO-RIGHT in block order — a plain
+    * sum() aggregates in arrival order and can differ from a fixed
+    * summation by an ulp, which a cross-engine compare would see; the
+    * oracles replay exactly this fold.
+    */
+  private def foldParts(field: String): Column = aggregate(
+    transform(col("__parts"), p => p.getField(field)),
+    lit(0.0), (acc, x) => acc + x)
 
   // ---------------------------------------------------------------- //
   // IVF-PQ (coarse routing over PQ codes)                             //
@@ -1470,68 +1421,33 @@ object Similarity {
       codebooks: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
       nprobe: Int, roundTo: Int): DataFrame = {
-    val m = codebooks.select(max("block")).head().getInt(0) + 1
-    val dim = vectorDim(queries, vecCol)
-    require(dim % m == 0, s"dim $dim must be divisible by m = $m")
-    val sub = dim / m
-    val qv = col(vecCol).cast("array<double>")
-    val cv = col("centroid_vec").cast("array<double>")
-
-    // coarse routing (identical to ivfPqTopK) + per-(query, centroid)
-    // dot(q, c) carried on the probe rows
-    val centsN = broadcast(cents.select(col("centroid_id"),
-      col("centroid_vec"), norm(cv).as("__cn")))
-    val q = withNorm(queries, idCol, vecCol, "query_id", "__qv", "__qn")
-    val probes = q.crossJoin(centsN)
+    val (m, sub, qlut) = adcTable(queries, codebooks, idCol, vecCol)
+    // routing + per-(query, centroid) dot(q, c) on the probed rows
+    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe, roundTo)
       .select(col("query_id"), col("__qn"), col("centroid_id"),
-        round(cosFromNorms(col("__qv"), col("centroid_vec"),
-          col("__qn"), col("__cn")), roundTo).as("csim"),
         dot(col("__qv"), col("centroid_vec")).as("__qc"))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    val probed = probes.withColumn("__r", row_number().over(pw))
-      .where(col("__r") <= nprobe)
-      .select("query_id", "__qn", "centroid_id", "__qc")
-
-    // per-(query, block, code): dot(q_b, cw) + ‖cw‖²
-    val qBlocks = queries.select(col(idCol).as("__lq"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
-        slice(qv, b * sub + lit(1), lit(sub)))).as(Seq("__blk", "__qsub")))
-    val qlut = broadcast(qBlocks
-      .join(broadcast(codebooks), col("__blk") === col("block"))
-      .select(col("__lq"), col("block"), col("code"),
-        dot(col("__qsub"), col("codeword")).as("__dq"),
-        dot(col("codeword"), col("codeword")).as("__ww")))
     // per-(centroid, block, code): dot(c_b, cw) — nlist·m·k rows
-    val cBlocks = cents.select(col("centroid_id").as("__lc"),
-      dot(cv, cv).as("__cn2"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
-        slice(cv, b * sub + lit(1), lit(sub)))).as(Seq("__blk", "__csub")))
-    val clut = broadcast(cBlocks
+    val cv = col("centroid_vec").cast("array<double>")
+    val clut = broadcast(cents
+      .select(col("centroid_id").as("__lc"), dot(cv, cv).as("__cn2"),
+        subBlocks(cv, m, sub).as(Seq("__blk", "__csub")))
       .join(broadcast(codebooks), col("__blk") === col("block"))
       .select(col("__lc"), col("__cn2"), col("block").as("__cb"),
-        col("code").as("__cc"), dot(col("__csub"), col("codeword"))
+        col("code").as("__ck"), dot(col("__csub"), col("codeword"))
           .as("__cx")))
 
-    val cand = index.join(broadcast(probed), Seq("centroid_id"))
+    index.join(broadcast(probed), Seq("centroid_id"))
       .where(col("query_id") =!= col(idCol))
       .select(col("query_id"), col("__qn"), col("__qc"),
-        col("centroid_id"), col(idCol).as("neighbor_id"), col("codes"))
-    def foldParts(field: String) = aggregate(
-      transform(col("__parts"), p => p.getField(field)),
-      lit(0.0), (acc, x) => acc + x)
-    val sims = cand
-      .select(col("query_id"), col("__qn"), col("__qc"),
-        col("centroid_id"), col("neighbor_id"),
+        col("centroid_id"), col(idCol).as("neighbor_id"),
         posexplode(col("codes")).as(Seq("__kblk", "__kcode")))
-      .join(qlut, col("query_id") === col("__lq") &&
+      .join(qlut.drop("__qn"), col("query_id") === col("__lq") &&
         col("__kblk") === col("block") && col("__kcode") === col("code"))
       .join(clut, col("centroid_id") === col("__lc") &&
-        col("__kblk") === col("__cb") && col("__kcode") === col("__cc"))
+        col("__kblk") === col("__cb") && col("__kcode") === col("__ck"))
       .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("__kblk").as("b"),
-          col("__dq").as("dq"), col("__cx").as("cx"),
-          col("__ww").as("ww")))).as("__parts"),
+      .agg(blockParts(col("__kblk"), "dq" -> col("__dq"),
+          "cx" -> col("__cx"), "ww" -> col("__cc")),
         first(col("__qn")).as("__qn1"),
         first(col("__qc")).as("__qc1"),
         first(col("__cn2")).as("__cn21"))
@@ -1540,7 +1456,6 @@ object Similarity {
           col("__qn1") * sqrt(col("__cn21") +
             lit(2.0) * foldParts("cx") + foldParts("ww")),
           lit(0.0)), roundTo).as("sim"))
-    sims
   }
 
   /** The routed, ADC-scored candidate rows behind [[ivfPqTopK]] —
@@ -1554,55 +1469,21 @@ object Similarity {
       codebooks: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
       nprobe: Int, roundTo: Int): DataFrame = {
-    val m = codebooks.select(max("block")).head().getInt(0) + 1
-    val dim = vectorDim(queries, vecCol)
-    require(dim % m == 0, s"dim $dim must be divisible by m = $m")
-    val sub = dim / m
-    val qv = col(vecCol).cast("array<double>")
-
-    // coarse routing: nprobe nearest centroids per query (the same
-    // bounded per-query window as [[ivfTopKWithCentroids]])
-    val centsN = broadcast(cents.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
-    val q = withNorm(queries, idCol, vecCol, "query_id", "__qv", "__qn")
-    val probes = q.crossJoin(centsN)
-      .select(col("query_id"), col("centroid_id"),
-        round(cosFromNorms(col("__qv"), col("centroid_vec"),
-          col("__qn"), col("__cn")), roundTo).as("csim"))
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    val probed = probes.withColumn("__r", row_number().over(pw))
-      .where(col("__r") <= nprobe)
+    val (_, _, lut) = adcTable(queries, codebooks, idCol, vecCol)
+    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe, roundTo)
       .select("query_id", "centroid_id")
-
-    // per-(query, block, code) ADC lookup table — identical to
-    // [[pqTopK]]'s; queries·m·k rows, broadcast-sized
-    val qBlocks = queries.select(col(idCol).as("__lq"),
-      norm(qv).as("__qn"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
-        slice(qv, b * sub + lit(1), lit(sub)))).as(Seq("__blk", "__qsub")))
-    val lut = broadcast(qBlocks
-      .join(broadcast(codebooks), col("__blk") === col("block"))
-      .select(col("__lq"), col("__qn"), col("block"), col("code"),
-        dot(col("__qsub"), col("codeword")).as("__dq"),
-        dot(col("codeword"), col("codeword")).as("__cc")))
-
     // candidates: ONLY the probed buckets' codes — the index side
     // streams, the (queries·nprobe)-row probe table broadcasts
-    val cand = index.join(broadcast(probed), Seq("centroid_id"))
+    index.join(broadcast(probed), Seq("centroid_id"))
       .where(col("query_id") =!= col(idCol))
       .select(col("query_id"), col(idCol).as("neighbor_id"), col("codes"))
-    def foldParts(field: String) = aggregate(
-      transform(col("__parts"), p => p.getField(field)),
-      lit(0.0), (acc, x) => acc + x)
-    cand
       .select(col("query_id"), col("neighbor_id"),
         posexplode(col("codes")).as(Seq("__cblk", "__ccode")))
       .join(lut, col("query_id") === col("__lq") &&
         col("__cblk") === col("block") && col("__ccode") === col("code"))
       .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("__cblk").as("b"),
-          col("__dq").as("dq"), col("__cc").as("cc")))).as("__parts"),
+      .agg(blockParts(col("__cblk"), "dq" -> col("__dq"),
+          "cc" -> col("__cc")),
         first(col("__qn")).as("__qn1"))
       .select(col("query_id"), col("neighbor_id"),
         round(foldParts("dq") / nullif(
@@ -1859,12 +1740,13 @@ object Similarity {
         col("__q").as("codes"), col("d2_at_selection"))
   }
 
-  /** Maximal-marginal-relevance (MMR) reranking: from a candidate
-    * frame carrying a relevance score, greedily select `k` results
-    * maximizing `λ·rel − (1−λ)·max_cos_to_selected` — the standard
-    * diversity reranker (Carbonell–Goldstein) a retrieval stack runs
-    * between ANN/BM25 candidates and the final context window, so
-    * near-duplicate hits don't crowd out coverage.
+  /** Maximal-marginal-relevance (MMR) reranking, per query: from each
+    * query's candidate list carrying a relevance score, greedily select
+    * `k` results maximizing `λ·rel − (1−λ)·max_cos_to_selected` — the
+    * standard diversity reranker (Carbonell–Goldstein) a retrieval
+    * stack runs between ANN/BM25 candidates and the final context
+    * window, so near-duplicate hits don't crowd out coverage. A single
+    * candidate pool is one query: pass a literal query column.
     *
     * Determinism: each candidate's objective quantizes to integer
     * micro-units BEFORE the argmax (`floor(obj·10⁶)`, ties to the
@@ -1873,74 +1755,10 @@ object Similarity {
     * bit-reproducible across engines and partitionings. λ enters as
     * exact per-mill weights (`lambdaMilli/1000`, `(1000−λm)/1000` —
     * each a single literal division, never `1 − 0.7` drift).
-    *
-    * Shape: the [[kCenterSelect]] recurrence — k−1 unrolled rounds,
-    * each ONE candidate-frame scan updating a running max-cosine
-    * against the single new selection (broadcast one-row frame,
-    * checkpointed); candidate norms compute once. Candidate frames
-    * are rerank-sized (top-N from a retriever), but nothing here
-    * breaks at corpus scale either. Output: (rank, id, rel,
-    * max_cos_prior, obj_micro at selection).
-    */
-  def mmrRerank(
-      candidates: DataFrame, idCol: String, vecCol: String,
-      relCol: String, k: Int, lambdaMilli: Int = 700): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    require(k <= 1000,
-      "mmrRerank runs k candidate scans with a checkpoint each: " +
-        "rerank-sized k only (cut candidates upstream for larger k)")
-    require(lambdaMilli >= 0 && lambdaMilli <= 1000,
-      "lambdaMilli is per-mill")
-    val lam = lambdaMilli / 1000.0
-    val mu = (1000 - lambdaMilli) / 1000.0
-    // zero-norm vectors are excluded up front: cosine against them is
-    // 0/0 = NaN, and NaN sorts ABOVE every double in Spark, so one
-    // such candidate would lock __mc to NaN for every remaining row
-    // and floor(NaN)→0 would silently corrupt all later obj_micro
-    val base = candidates.select(col(idCol).as("__id"),
-        col(vecCol).cast("array<double>").as("__v"),
-        col(relCol).cast("double").as("__rel"))
-      .where(col("__v").isNotNull && col("__rel").isNotNull)
-      .withColumn("__n", sqrt(dot(col("__v"), col("__v"))))
-      .where(col("__n") > lit(0.0))
-      .withColumn("__mc", lit(0.0))
-    def obj = lit(lam) * col("__rel") - lit(mu) * col("__mc")
-    def objMicro = floor(obj * lit(1000000L)).cast("long")
-    var cur = base.localCheckpoint()
-    var out = Seq.empty[DataFrame]
-    for (r <- 1 to k) {
-      val pick = cur
-        .withColumn("__obj", objMicro)
-        .agg(min_by(struct(col("__id"), col("__v"), col("__n"),
-            col("__rel"), col("__mc"), col("__obj")),
-          struct((-col("__obj")).as("__nobj"), col("__id"))).as("__s"))
-        .select(col("__s.__id").as("__cid"), col("__s.__v").as("__cv"),
-          col("__s.__n").as("__cn"), col("__s.__rel").as("__crel"),
-          col("__s.__mc").as("__cmc"), col("__s.__obj").as("__cobj"))
-        .localCheckpoint()
-      out :+= pick.select(lit(r).as("rank"), col("__cid").as(idCol),
-        col("__crel").as("rel"), col("__cmc").as("max_cos_prior"),
-        col("__cobj").as("obj_micro"))
-      if (r < k)
-        cur = cur.crossJoin(broadcast(pick))
-          .where(col("__id") =!= col("__cid"))
-          .select(col("__id"), col("__v"), col("__n"), col("__rel"),
-            greatest(col("__mc"),
-              dot(col("__v"), col("__cv")) / (col("__n") * col("__cn")))
-              .as("__mc"))
-          .localCheckpoint()
-    }
-    // fewer candidates than k: exhausted rounds aggregate an empty
-    // frame to a null pick — drop those rows instead of emitting
-    // null-id ranks
-    out.reduce(_.unionByName(_)).where(col(idCol).isNotNull)
-  }
-
-  /** [[mmrRerank]] with every greedy round's argmax PER QUERY — the
-    * shape a retrieval product actually runs (rerank each query's
-    * candidate list independently, thousands to millions of queries
-    * in one job). Same objective, quantization, and tie-breaks as the
-    * single-pool form, applied group-wise.
+    * Zero-norm candidates are excluded up front: cosine against them
+    * is 0/0 = NaN, and NaN sorts ABOVE every double in Spark, so one
+    * such candidate would lock the running max-cosine to NaN and
+    * floor(NaN)→0 would silently corrupt all later picks.
     *
     * Shape: k−1 unrolled rounds; each round's pick frame is ONE row
     * per query (`groupBy(query).agg(min_by …)`) joined back on the
@@ -1973,7 +1791,7 @@ object Similarity {
       .where(col("__g").isNotNull && col("__v").isNotNull &&
         col("__rel").isNotNull)
       .withColumn("__n", sqrt(dot(col("__v"), col("__v"))))
-      .where(col("__n") > lit(0.0)) // the mmrRerank NaN guard
+      .where(col("__n") > lit(0.0)) // the zero-norm NaN guard
       .withColumn("__mc", lit(0.0))
     def obj = lit(lam) * col("__rel") - lit(mu) * col("__mc")
     def objMicro = floor(obj * lit(1000000L)).cast("long")

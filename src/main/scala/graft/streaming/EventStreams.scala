@@ -91,7 +91,7 @@ object EventStreams {
   /** Streaming exact-dedup on a CONTENT fingerprint (not an id):
     * documents arriving within the watermark horizon that normalize to
     * already-seen text are dropped — the streaming twin of
-    * [[graft.dedup.Dedup.exactDedup]], with state bounded by the
+    * [[graft.dedup.Dedup.exactDedupAgg]], with state bounded by the
     * watermark instead of growing with the corpus. `tsCol` is the
     * event-time column the horizon is measured on.
     */
@@ -1157,7 +1157,7 @@ object EventStreams {
     * from the corpus (centroids are part of the index's identity).
     *
     * Readers: [[liveAnnIndex]] + [[graft.similarity.Similarity
-    * .ivfTopKOverIndexFrame]] (vector store) or
+    * .ivfTopK]] (vector store) or
     * [[graft.similarity.Similarity.ivfPqTopK]] (code store). At fixed
     * centroids the landed store is row-identical to a from-scratch
     * batch build over the union of all batches (spec-pinned), so
@@ -1205,7 +1205,7 @@ object EventStreams {
 
   /** The standing index over an [[annIndexMaintenanceSink]] store,
     * in the layout [[graft.similarity.Similarity
-    * .ivfTopKOverIndexFrame]] (vector store) / [[graft.similarity
+    * .ivfTopK]] (vector store) / [[graft.similarity
     * .Similarity.ivfPqTopK]] (code store, `codes` column) read —
     * `__batch` is the store's replay unit, not part of the index.
     */

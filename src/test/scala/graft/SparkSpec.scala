@@ -1,15 +1,29 @@
 package graft
 
 import graft.core.Sessions
+import java.nio.file.Files
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * test suites must not churn sessions per-suite).
+  * test suites must not churn sessions per-suite). Managed tables land in
+  * a temp warehouse that is removed when the JVM exits, so no run leaves
+  * state in the checkout.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = Sessions.local(cores = "4", shufflePartitions = 4)
+  lazy val spark: SparkSession = {
+    val warehouse = Files.createTempDirectory("graft-spec-warehouse").toFile
+    sys.addShutdownHook(JavaUtils.deleteRecursively(warehouse))
+    val s = Sessions.configure(
+        SparkSession.builder().master("local[4]").appName("graft"),
+        shufflePartitions = 4)
+      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {

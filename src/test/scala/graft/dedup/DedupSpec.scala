@@ -16,10 +16,21 @@ class DedupSpec extends SparkSpec {
   private val base = "the quick brown fox jumps over the lazy dog " +
     "while the cat watches from the warm window sill nearby"
 
-  test("exactDedup keeps first row per normalized text") {
+  /** The window form both dedup plans must equal: first row by id per
+    * normalized-text fingerprint.
+    */
+  private def windowDedup(d: org.apache.spark.sql.DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(graft.text.TextAnalysis.fingerprint(col("text")))
+      .orderBy(col("id").asc)
+    d.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1).drop("__rn")
+  }
+
+  test("exactDedupAgg keeps first row per normalized text") {
     val d = docs(
       (1, "Hello World"), (2, "hello   world"), (3, "different"))
-    val out = Dedup.exactDedup(d, "text", col("id").asc)
+    val out = Dedup.exactDedupAgg(d, "text", "id")
     assert(out.count() == 2)
     assert(out.orderBy("id").collect().map(_.getInt(0)).toSeq == Seq(1, 3))
   }
@@ -29,8 +40,7 @@ class DedupSpec extends SparkSpec {
     val d = docs(
       (5, "Hello World"), (2, "hello   world"), (9, "HELLO WORLD"),
       (3, "different"), (7, "Different"))
-    val win = Dedup.exactDedup(d, "text", col("id").asc)
-      .collect().map(_.toSeq).toSet
+    val win = windowDedup(d).collect().map(_.toSeq).toSet
     val agg = Dedup.exactDedupAgg(d, "text", "id")
       .collect().map(_.toSeq).toSet
     assert(agg == win)
@@ -55,8 +65,7 @@ class DedupSpec extends SparkSpec {
     val d = docs(
       (5, "Hello World"), (2, "hello   world"), (9, "HELLO WORLD"),
       (3, "different"), (7, "Different"))
-    val win = Dedup.exactDedup(d, "text", col("id").asc)
-      .collect().map(_.toSeq).toSet
+    val win = windowDedup(d).collect().map(_.toSeq).toSet
     val semi = Dedup.exactDedupSemi(d, "id", "text")
       .collect().map(_.toSeq).toSet
     assert(semi == win)

@@ -50,9 +50,9 @@ class IvfPqSpec extends SparkSpec {
     val probed = Similarity.ivfPqScoredCandidates(
       queries, index, books, cents, "vec_id", "embedding", nprobe, 4)
     // recompute the probe sets independently with the public pieces
-    val probeSets = Similarity.ivfTopKWithCentroids(
-        queries, d, "vec_id", "embedding", k = 500, cents,
-        nprobe = nprobe)
+    val probeSets = Similarity.ivfTopK(queries,
+        Similarity.annIndexRows(d, "vec_id", "embedding", cents), cents,
+        "vec_id", "embedding", k = 500, nprobe = nprobe)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getInt(0), bucketOf(r.getInt(1)))).distinct
       .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }

@@ -16,25 +16,6 @@ class MmrByQuerySpec extends SparkSpec {
   private def cands(rows: Seq[(Long, Long, Seq[Double], Double)]) =
     df(schema, rows.map { case (q, i, v, r) => Row(q, i, v, r) })
 
-  test("a single-query frame reproduces mmrRerank exactly (twin)") {
-    val pool = Seq[(Long, Seq[Double], Double)](
-      (1L, Seq(1.0, 0.0), 0.95), (2L, Seq(0.999, 0.01), 0.94),
-      (3L, Seq(0.0, 1.0), 0.60), (4L, Seq(0.5, 0.5), 0.80),
-      (5L, Seq(0.1, 0.9), 0.70))
-    val single = Similarity.mmrRerank(
-        df(StructType(schema.fields.drop(1)),
-          pool.map { case (i, v, r) => Row(i, v, r) }),
-        "id", "v", "rel", k = 4)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(4)))
-      .toSet
-    val grouped = Similarity.mmrRerankByQuery(
-        cands(pool.map { case (i, v, r) => (7L, i, v, r) }),
-        "q", "id", "v", "rel", k = 4)
-      .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(5)))
-      .toSet
-    assert(grouped === single)
-  }
-
   test("queries rerank independently: identical candidate lists under " +
       "different query keys yield identical per-query picks") {
     val pool = Seq[(Long, Seq[Double], Double)](
@@ -67,7 +48,7 @@ class MmrByQuerySpec extends SparkSpec {
     assert(out.count(_._1 == 2L) === 3)
   }
 
-  test("zero-norm candidates are excluded per the mmrRerank contract") {
+  test("zero-norm candidates are excluded (the NaN guard)") {
     val rows = Seq[(Long, Long, Seq[Double], Double)](
       (1L, 11L, Seq(1.0, 0.0), 0.9), (1L, 12L, Seq(0.0, 0.0), 0.95),
       (1L, 13L, Seq(0.0, 1.0), 0.5))

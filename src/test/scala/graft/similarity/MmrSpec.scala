@@ -1,9 +1,13 @@
 package graft.similarity
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
+/** [[Similarity.mmrRerankByQuery]] over one candidate pool (a literal
+  * query key): the greedy MMR objective itself.
+  */
 class MmrSpec extends SparkSpec {
 
   private def cands(rows: Seq[(Long, Seq[Double], Double)]) = df(
@@ -13,9 +17,15 @@ class MmrSpec extends SparkSpec {
       StructField("rel", DoubleType))),
     rows.map { case (i, v, r) => Row(i, v, r) })
 
+  /** (rank, id, …) rows of one pool reranked as a single query. */
+  private def mmr(pool: DataFrame, k: Int, lambdaMilli: Int = 700) =
+    Similarity.mmrRerankByQuery(pool.withColumn("q", lit(0)), "q", "id",
+        "v", "rel", k, lambdaMilli)
+      .drop("q")
+
   private def rerank(rows: Seq[(Long, Seq[Double], Double)], k: Int,
       lambdaMilli: Int = 700) =
-    Similarity.mmrRerank(cands(rows), "id", "v", "rel", k, lambdaMilli)
+    mmr(cands(rows), k, lambdaMilli)
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
       .map(_._2)
 
@@ -46,8 +56,7 @@ class MmrSpec extends SparkSpec {
       (i, Seq((i % 4).toDouble + 0.1, (i % 3).toDouble),
         0.5 + (i % 5) * 0.1))
     def run(parts: Int) =
-      Similarity.mmrRerank(cands(rows).repartition(parts), "id", "v",
-          "rel", k = 5)
+      mmr(cands(rows).repartition(parts), k = 5)
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     assert(run(1) === run(7))
     // identical rows -> identical objective: smaller id wins
@@ -90,7 +99,7 @@ class MmrSpec extends SparkSpec {
     val frame = df(schema, Seq(
       Row("doc-b", Seq(1.0, 0.0), 0.8),
       Row("doc-a", Seq(1.0, 0.0), 0.8)))
-    val out = Similarity.mmrRerank(frame, "id", "v", "rel", k = 1)
+    val out = mmr(frame, k = 1)
       .collect().map(_.getString(1))
     assert(out === Array("doc-a"))
   }

@@ -67,17 +67,18 @@ class RecallAuditSpec extends SparkSpec {
     val exact = Similarity.bruteForceTopKAgg(
       q, e, "vec_id", "embedding", k = 10)
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
+    val index = Similarity.annIndexRows(e, "vec_id", "embedding", cents)
     def audit(nprobe: Int) = Similarity.recallAudit(
-        Similarity.ivfTopKWithCentroids(q, e, "vec_id", "embedding",
-          k = 10, cents, nprobe),
+        Similarity.ivfTopK(q, index, cents, "vec_id", "embedding",
+          k = 10, nprobe),
         exact).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getDouble(3))).toMap
     // independent replay of one audit row from the two result sets
     val ex = exact.select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ro = Similarity.ivfTopKWithCentroids(q, e, "vec_id",
-        "embedding", k = 10, cents, nprobe = 3)
+    val ro = Similarity.ivfTopK(q, index, cents, "vec_id",
+        "embedding", k = 10, nprobe = 3)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = audit(3)
@@ -97,9 +98,10 @@ class RecallAuditSpec extends SparkSpec {
       "values, and aggregate recall is within tolerance") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
+    val index = Similarity.annIndexRows(e, "vec_id", "embedding", cents)
     def auditOf(q: org.apache.spark.sql.DataFrame) = Similarity.recallAudit(
-      Similarity.ivfTopKWithCentroids(q, e, "vec_id", "embedding",
-        k = 10, cents, nprobe = 3),
+      Similarity.ivfTopK(q, index, cents, "vec_id", "embedding",
+        k = 10, nprobe = 3),
       Similarity.bruteForceTopKAgg(q, e, "vec_id", "embedding", k = 10))
     val sampled = auditOf(e.where(graft.sampling.Sampling
       .hashFraction(col("vec_id"), "audit") < 0.10))

@@ -1,7 +1,8 @@
 package graft.similarity
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,10 +47,31 @@ class SimilaritySpec extends SparkSpec {
     (3, Seq(math.cos(1.2), math.sin(1.2))),
     (4, Seq(-1.0, 0.0))) // opposite
 
-  test("bruteForceTopK ranks by cosine, excludes self, keeps k") {
+  /** The window/`row_number` top-k every heap-ranked search must equal:
+    * rounded cosine, sim DESC (NULLs last), neighbor_id ASC.
+    */
+  private def windowTopK(q: DataFrame, c: DataFrame, k: Int) = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    q.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      .crossJoin(c.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("cv")))
+      .where(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        round(Similarity.cosine(col("qv"), col("cv")), 4).as("sim"))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+  }
+
+  private def rows(d: DataFrame) =
+    d.select(col("query_id"), col("neighbor_id"), col("sim"),
+        col("rank").cast("int").as("rank"))
+      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+
+  test("bruteForceTopKAgg ranks by cosine, excludes self, keeps k") {
     val q = corpus.where(col("vec_id") === 0)
-    val out = Similarity.bruteForceTopK(q, corpus, "vec_id", "embedding",
-      k = 3).orderBy("rank").collect()
+    val out = Similarity.bruteForceTopKAgg(q, corpus, "vec_id",
+      "embedding", k = 3).orderBy("rank").collect()
     assert(out.length == 3)
     assert(out.map(_.getAs[Int]("neighbor_id")).toSeq == Seq(1, 2, 3))
     assert(out.map(_.getAs[Int]("rank")).toSeq == Seq(1, 2, 3))
@@ -59,10 +81,12 @@ class SimilaritySpec extends SparkSpec {
   test("ivfTopK with full probing matches brute force") {
     val q = corpus.where(col("vec_id") === 0)
     // nlist 3, nprobe 3 probes all buckets → exact for any centroids
-    val ivf = Similarity.ivfTopK(q, corpus, "vec_id", "embedding",
-      k = 3, nlist = 3, nprobe = 3).orderBy("rank")
+    val cents = Similarity.hashKCentroids(corpus, "vec_id", "embedding", 3)
+    val ivf = Similarity.ivfTopK(q,
+        Similarity.annIndexRows(corpus, "vec_id", "embedding", cents),
+        cents, "vec_id", "embedding", k = 3, nprobe = 3).orderBy("rank")
       .select("neighbor_id", "sim").collect().map(r => (r.getInt(0), r.getDouble(1)))
-    val bf = Similarity.bruteForceTopK(q, corpus, "vec_id", "embedding",
+    val bf = Similarity.bruteForceTopKAgg(q, corpus, "vec_id", "embedding",
       k = 3).orderBy("rank")
       .select("neighbor_id", "sim").collect().map(r => (r.getInt(0), r.getDouble(1)))
     assert(ivf.toSeq == bf.toSeq)
@@ -83,16 +107,27 @@ class SimilaritySpec extends SparkSpec {
       "the window form on the sf0.001 embeddings") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.where(col("vec_id") < 10)
-    val win = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 10)
-      .select(col("query_id"), col("neighbor_id"), col("sim"),
-        col("rank").cast("int").as("rank"))
-      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    val agg = Similarity.bruteForceTopKAgg(q, e, "vec_id", "embedding", k = 10)
-      .select(col("query_id"), col("neighbor_id"), col("sim"),
-        col("rank").cast("int").as("rank"))
-      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    assert(agg == win)
+    val agg = rows(Similarity.bruteForceTopKAgg(
+      q, e, "vec_id", "embedding", k = 10))
+    assert(agg == rows(windowTopK(q, e, k = 10)))
     assert(agg.size == 100)
+  }
+
+  test("zero-norm vectors: heap-ranked top-k keeps NULL sims and ranks " +
+      "them after every non-NULL sim, as the window form does") {
+    val c = vecs((1, Seq(1.0, 0.0)), (2, Seq(0.0, 0.0)),
+      (3, Seq(0.5, 0.5)), (4, Seq(0.0, 1.0)))
+    val q = c.where(col("vec_id") <= 2)
+    val want = rows(windowTopK(q, c, k = 3))
+    assert(want == Seq(
+      Seq(1, 3, 0.7071, 1), Seq(1, 4, 0.0, 2), Seq(1, 2, null, 3),
+      Seq(2, 1, null, 1), Seq(2, 3, null, 2), Seq(2, 4, null, 3)))
+    assert(rows(Similarity.bruteForceTopKAgg(
+      q, c, "vec_id", "embedding", k = 3)) == want)
+    val cents = Similarity.hashKCentroids(c, "vec_id", "embedding", 2)
+    assert(rows(Similarity.ivfTopK(q,
+      Similarity.annIndexRows(c, "vec_id", "embedding", cents), cents,
+      "vec_id", "embedding", k = 3, nprobe = 2)) == want)
   }
 
   test("TopKByScore keeps ties ordered by id and caps at k") {
@@ -248,25 +283,26 @@ class SimilaritySpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
-  test("ivfTopKWithCentroids over k-medians centroids reaches useful " +
-      "recall vs brute force on the sf0.001 embeddings") {
+  test("ivfTopK over k-medians centroids reaches useful recall vs " +
+      "brute force on the sf0.001 embeddings") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.where(col("vec_id") < 10)
     val cents = Similarity.kMediansCentroids(
       e, "vec_id", "embedding", k = 10, iters = 2)
-    val ivf = Similarity.ivfTopKWithCentroids(
-        q, e, "vec_id", "embedding", k = 10, cents, nprobe = 3)
+    val ivf = Similarity.ivfTopK(q,
+        Similarity.annIndexRows(e, "vec_id", "embedding", cents), cents,
+        "vec_id", "embedding", k = 10, nprobe = 3)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bf = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 10)
+    val bf = Similarity.bruteForceTopKAgg(q, e, "vec_id", "embedding", k = 10)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (ivf & bf).size.toDouble / bf.size
     assert(recall >= 0.5, s"k-medians IVF recall $recall")
   }
 
-  test("ivfTopKOverIndex: prebuilt bucketed index returns exactly the " +
-      "direct ivfTopKWithCentroids results") {
+  test("ivfTopK over a prebuilt bucketed index table returns exactly " +
+      "its results over the same index rows as a frame") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.where(col("vec_id") < 5)
     val cents = Similarity.strideCentroids(e, "vec_id", "embedding", 50)
@@ -274,15 +310,11 @@ class SimilaritySpec extends SparkSpec {
       val n = Similarity.buildIvfIndex(
         e, "vec_id", "embedding", cents, "ivf_idx_spec", numBuckets = 4)
       assert(n == e.count())
-      val direct = Similarity.ivfTopKWithCentroids(
-          q, e, "vec_id", "embedding", 10, cents, nprobe = 3)
-        .select("query_id", "neighbor_id", "sim", "rank")
-        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-      val indexed = Similarity.ivfTopKOverIndex(
-          spark, q, "vec_id", "embedding", 10, cents, "ivf_idx_spec",
-          nprobe = 3)
-        .select("query_id", "neighbor_id", "sim", "rank")
-        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+      val direct = rows(Similarity.ivfTopK(q,
+        Similarity.annIndexRows(e, "vec_id", "embedding", cents), cents,
+        "vec_id", "embedding", 10, nprobe = 3))
+      val indexed = rows(Similarity.ivfTopK(q, spark.table("ivf_idx_spec"),
+        cents, "vec_id", "embedding", 10, nprobe = 3))
       assert(indexed == direct)
       assert(indexed.nonEmpty)
     } finally spark.sql("DROP TABLE IF EXISTS ivf_idx_spec")
@@ -484,9 +516,10 @@ class SimilaritySpec extends SparkSpec {
         r.getAs[Any]("neighbor_id"))).toSet
     val q = Similarity.quantizeInt8(d, "embedding")
       .select(col("vec_id"), col("embedding_q"))
-    val ivfQuant = Similarity.ivfTopK(
-        q.where(col("vec_id") < 5), q, "vec_id", "embedding_q",
-        k, nlist = 8, nprobe = 4)
+    val cents = Similarity.hashKCentroids(q, "vec_id", "embedding_q", 8)
+    val ivfQuant = Similarity.ivfTopK(q.where(col("vec_id") < 5),
+        Similarity.annIndexRows(q, "vec_id", "embedding_q", cents), cents,
+        "vec_id", "embedding_q", k, nprobe = 4)
       .collect().map(r => (r.getAs[Any]("query_id"),
         r.getAs[Any]("neighbor_id"))).toSet
     val recall = (exact & ivfQuant).size.toDouble / exact.size

@@ -63,10 +63,10 @@ class AnnIndexSinkSpec extends SparkSpec {
         df(b1 ++ b2), "vec_id", "embedding", c)
       assert(norml(live) === norml(fresh))
       // search equality: probe both with the corpus itself as queries
-      val overStore = Similarity.ivfTopKOverIndexFrame(
-        df(b1 ++ b2), "vec_id", "embedding", k = 2, c, live, nprobe = 2)
-      val overFresh = Similarity.ivfTopKOverIndexFrame(
-        df(b1 ++ b2), "vec_id", "embedding", k = 2, c, fresh, nprobe = 2)
+      val overStore = Similarity.ivfTopK(
+        df(b1 ++ b2), live, c, "vec_id", "embedding", k = 2, nprobe = 2)
+      val overFresh = Similarity.ivfTopK(
+        df(b1 ++ b2), fresh, c, "vec_id", "embedding", k = 2, nprobe = 2)
       def rows(d: DataFrame) = d
         .select("query_id", "neighbor_id", "sim", "rank")
         .collect().map(_.toSeq).toSet
