@@ -702,21 +702,78 @@ object Dedup {
     * MinHash cost at corpus scale drops ~numHashes×.
     */
   private def shingleHashHalves(idCol: String): Seq[Column] = {
-    val d = md5(col("shingle"))
-    Seq(col(idCol),
-      conv(substring(d, 1, 8), 16, 10).cast("long").as("__h1"),
-      conv(substring(d, 9, 8), 16, 10).cast("long").as("__h2"))
+    val (h1, h2) = hashHalves(md5(col("shingle")))
+    Seq(col(idCol), h1.as("__h1"), h2.as("__h2"))
   }
+
+  /** The family's seed: (h1, h2), the two leading 32-bit halves of a
+    * shingle's md5 hex digest. Both signature forms derive their
+    * hashes here: [[shingleHashHalves]] for the aggregate and
+    * [[rowBandKeys]] per row.
+    */
+  private def hashHalves(digest: Column): (Column, Column) =
+    (conv(substring(digest, 1, 8), 16, 10).cast("long"),
+      conv(substring(digest, 9, 8), 16, 10).cast("long"))
+
+  /** Member `i` of the family, h_i = h1 + i·h2 — the one definition the
+    * aggregate and the per-row signature share.
+    */
+  private def familyMember(h1: Column, h2: Column, i: Int): Column = {
+    require(i < 32, "h1 + i*h2 stays exact for i < 32")
+    h1 + lit(i.toLong) * h2
+  }
+
+  /** A row's LSH band keys: one (band, sig) struct per band over its
+    * signature columns h0..h(k-1), where band j's key is the md5 of its
+    * `rowsPerBand` signature rows joined by "|".
+    */
+  private def bandKeys(bands: Int, rowsPerBand: Int): Seq[Column] =
+    (0 until bands).map { b =>
+      val rows = (0 until rowsPerBand)
+        .map(r => col(s"h${b * rowsPerBand + r}").cast("string"))
+      struct(lit(b).as("band"), md5(concat_ws("|", rows: _*)).as("sig"))
+    }
 
   /** MinHash signature aggregates over (__h1, __h2) rows: one row per
     * document, columns h0..h(k-1). ALL k mins compute in a single
     * aggregation — map-side partial min means the shuffle carries k
     * longs per (doc, partition), not per shingle.
     */
-  private def minhashAggs(numHashes: Int): Seq[Column] = {
-    require(numHashes <= 32, "h1 + i*h2 stays exact for i < 32")
+  private def minhashAggs(numHashes: Int): Seq[Column] =
     (0 until numHashes).map(i =>
-      min(col("__h1") + lit(i.toLong) * col("__h2")).as(s"h$i"))
+      min(familyMember(col("__h1"), col("__h2"), i)).as(s"h$i"))
+
+  /** [[buildLshIndex]]'s band keys computed per row, with no
+    * aggregation: each row of `sets`, whose `setCol` holds its distinct
+    * shingle array ([[graft.text.TextAnalysis.shingleArray]]), becomes
+    * one row per band with all of its columns plus (band, sig). The
+    * shingles are hashed once, and each signature row h_i is
+    * `array_min` over the array. A row with an empty array (text
+    * shorter than `n` words, or NULL) has no rows, as in the aggregate
+    * form: it explodes a NULL array rather than passing a filter, which
+    * the optimizer would push below the shingling and so run it twice.
+    */
+  private[dedup] def rowBandKeys(
+      sets: DataFrame, setCol: String,
+      numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val keep = sets.columns.toSeq.map(col)
+    // (h1, h2) per shingle in its own projection: the k members below
+    // all read it, and CollapseProject does not inline a non-cheap
+    // producer read more than once, so each md5 runs once per shingle
+    sets
+      .select(keep :+ transform(
+        transform(col(setCol), s => md5(s)), d => {
+          val (h1, h2) = hashHalves(d)
+          struct(h1.as("h1"), h2.as("h2"))
+        }).as("__hh"): _*)
+      .select(keep ++ (0 until numHashes).map(i =>
+        array_min(transform(col("__hh"),
+          h => familyMember(h("h1"), h("h2"), i))).as(s"h$i")): _*)
+      .select(keep :+ explode(when(size(col(setCol)) > 0,
+        array(bandKeys(bands, numHashes / bands): _*))).as("__bk"): _*)
+      .select(keep ++ Seq(col("__bk.band").as("band"),
+        col("__bk.sig").as("sig")): _*)
   }
 
   def minhashSignatures(
@@ -804,12 +861,8 @@ object Dedup {
   def bandedSignatures(
       signatures: DataFrame, idCol: String,
       bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { bIdx =>
-      val parts = (0 until rowsPerBand)
-        .map(r => col(s"h${bIdx * rowsPerBand + r}").cast("string"))
-      struct(lit(bIdx).as("band"),
-        md5(concat_ws("|", parts: _*)).as("sig")).as(s"b$bIdx")
-    }
+    val bandCols = bandKeys(bands, rowsPerBand).zipWithIndex
+      .map { case (k, b) => k.as(s"b$b") }
     signatures
       .select(col(idCol) +: bandCols: _*)
       .select(col(idCol), explode(array((0 until bands)
@@ -1062,13 +1115,19 @@ object Dedup {
     * Jaccard against the candidate documents' shingles. Emits
     * verified (batch_id, corpus_id, jaccard ≥ threshold) matches.
     *
-    * Scale: the batch (small) is shingled/signed/banded in full; the
-    * CORPUS is never shuffled wholesale — the index probe is a join
-    * on (band, sig), and the verify leg semi-joins the corpus text
-    * down to candidate ids BEFORE its per-document distinct, so every
-    * corpus-side exchange is candidate-sized (the q74 Bloom
-    * treatment, lifted from exact to near duplicates). Band
-    * parameters must match the index's.
+    * Scale: one lazy plan with no persists, whose cost follows the
+    * batch and its candidates. Each batch row's distinct shingle array
+    * is built once and gives its signature and band keys per row
+    * ([[rowBandKeys]], the same family and band keys as
+    * [[buildLshIndex]]), with no aggregation. The index and the corpus
+    * are each scanned once for their columns only: the probe is an
+    * equi-join on (band, sig), and the corpus text is semi-joined to
+    * the candidate ids BEFORE it is shingled, so only candidate
+    * documents are shingled, and each pair is scored by
+    * `array_intersect` of two distinct shingle arrays. Reading only the
+    * matching index rows would need an index table bucketed by
+    * (band, sig). Ids must be unique on each side; band parameters must
+    * match the index's.
     */
   def nearDupMatches(
       corpus: DataFrame, index: DataFrame, batch: DataFrame,
@@ -1077,41 +1136,30 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0,1]")
-    // batch shingles feed the signature agg AND the verify leg
-    val shB = TextAnalysis.explodeShinglesRaw(batch, idCol, textCol, n)
-      .transform(graft.core.CacheScope.disk)
-    val sigAggs = minhashAggs(numHashes)
-    val batchBanded = bandedSignatures(
-      shB.select(shingleHashHalves(idCol): _*)
-        .groupBy(idCol).agg(sigAggs.head, sigAggs.tail: _*),
-      idCol, bands, numHashes / bands)
-    val cands = batchBanded
-      .select(col(idCol).as("batch_id"), col("band"), col("sig"))
+    val sets = batch.select(col(idCol).as("batch_id"),
+      TextAnalysis.shingleArray(col(textCol), n).as("__sb"))
+    // __sb is a function of batch_id, so this is the distinct candidate
+    // pair; it carries each batch document's set to the verify
+    val cands = rowBandKeys(sets, "__sb", numHashes, bands)
       .join(index.select(col(idCol).as("corpus_id"), col("band"),
         col("sig")), Seq("band", "sig"))
-      .select("batch_id", "corpus_id").distinct()
-      .transform(graft.core.CacheScope.disk)
-    // exact verify over candidate documents only (distinct shingles,
-    // candidate-sized on both legs)
-    val shBc = shB
-      .join(cands.select(col("batch_id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("batch_id"), col("shingle")).distinct()
-      .transform(graft.core.CacheScope.disk)
-    val shCc = TextAnalysis.explodeShinglesRaw(corpus, idCol, textCol, n)
-      .join(cands.select(col("corpus_id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("corpus_id"), col("shingle")).distinct()
-      .transform(graft.core.CacheScope.disk)
-    val nB = shBc.groupBy("batch_id").agg(count(lit(1)).as("__nb"))
-    val nC = shCc.groupBy("corpus_id").agg(count(lit(1)).as("__nc"))
-    shBc.join(shCc, Seq("shingle"))
-      .groupBy("batch_id", "corpus_id")
-      .agg(count(lit(1)).as("__common"))
-      .join(cands, Seq("batch_id", "corpus_id"), "left_semi")
-      .join(nB, Seq("batch_id")).join(nC, Seq("corpus_id"))
-      .withColumn("jaccard", col("__common").cast("double") /
-        (col("__nb") + col("__nc") - col("__common")).cast("double"))
+      .select("batch_id", "__sb", "corpus_id").distinct()
+    // candidate corpus documents only, each shingled once below the
+    // verify join: shingled above it, the threshold filter pushed into
+    // the join condition would shingle them again for every pair
+    val corpusSets = corpus
+      .select(col(idCol).as("corpus_id"), col(textCol).as("__ct"))
+      .join(cands.select("corpus_id"), Seq("corpus_id"), "left_semi")
+      .select(col("corpus_id"),
+        TextAnalysis.shingleArray(col("__ct"), n).as("__sc"))
+    cands.join(corpusSets, Seq("corpus_id"))
+      .select(col("batch_id"), col("corpus_id"),
+        size(array_intersect(col("__sb"), col("__sc"))).cast("long")
+          .as("__common"),
+        size(col("__sb")).cast("long").as("__nb"),
+        size(col("__sc")).cast("long").as("__nc"))
+      .withColumn("jaccard",
+        jaccardScore(col("__common"), col("__nb"), col("__nc")))
       .where(col("jaccard") >= threshold)
       .select("batch_id", "corpus_id", "jaccard")
   }

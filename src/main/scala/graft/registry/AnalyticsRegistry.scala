@@ -1789,27 +1789,32 @@ private[graft] trait AnalyticsCore {
     * duplicates hash-mismatches. The zkey checksum is summed mod a
     * prime (order-independent, overflow-free at any sf); file counts
     * and the single-exchange plan are spec-anchored (CompactionSpec).
+    * The one-row result is materialised before the temp directory
+    * that held the table is deleted, so a call leaves nothing behind.
     */
   private[graft] def compactZOrderFidelity(
       s: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_q104").toString + "/orders"
-    t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"),
-        Fx.dateKey(col("o_orderdate")).as("odate_key"),
-        col("o_totalprice"))
-      .repartition(16)
-      .write.mode("overwrite").option("compression", "snappy")
-      .parquet(work)
-    graft.transform.Compaction.compactZOrdered(
-      s, work, "o_custkey", "odate_key", targetFileBytes = 1L << 30)
-    s.read.parquet(work)
-      .agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("o_orderkey")).as("n_keys"),
-        round(sum("o_totalprice"), 2).as("price_sum"),
-        sum(Analytics.zorderKey(col("o_custkey"), col("odate_key"))
-          % 1000003L).as("zkey_checksum"))
+    val root = java.nio.file.Files.createTempDirectory("graft_q104")
+    val work = root.toString + "/orders"
+    try {
+      t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"),
+          Fx.dateKey(col("o_orderdate")).as("odate_key"),
+          col("o_totalprice"))
+        .repartition(16)
+        .write.mode("overwrite").option("compression", "snappy")
+        .parquet(work)
+      graft.transform.Compaction.compactZOrdered(
+        s, work, "o_custkey", "odate_key", targetFileBytes = 1L << 30)
+      s.read.parquet(work)
+        .agg(
+          count(lit(1)).as("n_rows"),
+          countDistinct(col("o_orderkey")).as("n_keys"),
+          round(sum("o_totalprice"), 2).as("price_sum"),
+          sum(Analytics.zorderKey(col("o_custkey"), col("odate_key"))
+            % 1000003L).as("zkey_checksum"))
+        .localCheckpoint(eager = true)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   /** Supplier account balances rolled up the geography dimension chain

@@ -1951,10 +1951,6 @@ private[graft] object SimilarityRegistry {
     val e = emb(s, dir)
     val initial = e.where(col("vec_id") % 4 =!= 0)
     val batch = e.where(col("vec_id") % 4 === 0)
-    val cents = Similarity.hashKCentroids(
-      initial, "vec_id", "embedding", 16)
-    val books = Similarity.pqTrainCodebooks(initial, "vec_id",
-      "embedding", m = 4, k = 16, iters = 2, exactMedian = true)
     // artifact names carry the JVM pid: concurrent sessions (a verify
     // run racing a test suite that also executes the registry) must
     // not fight over one warehouse location — same-session reruns
@@ -1967,13 +1963,28 @@ private[graft] object SimilarityRegistry {
     // the warehouse dir outlives the in-memory catalog: a table
     // location left by a previous same-pid session would block
     // saveAsTable, so drop the catalog entry AND any orphaned location
-    Seq(pqT, vecT, booksT).foreach { t =>
+    def dropTables(): Unit = Seq(pqT, vecT, booksT).foreach { t =>
       s.sql(s"DROP TABLE IF EXISTS $t")
       val p = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir"), t)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true)
     }
+    dropTables()
+    // the result is materialised before the tables are dropped, so a
+    // run leaves no table in the warehouse
+    try indexLifecycleReport(s, e, initial, batch, pqT, vecT, booksT)
+      .localCheckpoint(eager = true)
+    finally dropTables()
+  }
+
+  private def indexLifecycleReport(
+      s: SparkSession, e: DataFrame, initial: DataFrame, batch: DataFrame,
+      pqT: String, vecT: String, booksT: String): DataFrame = {
+    val cents = Similarity.hashKCentroids(
+      initial, "vec_id", "embedding", 16)
+    val books = Similarity.pqTrainCodebooks(initial, "vec_id",
+      "embedding", m = 4, k = 16, iters = 2, exactMedian = true)
     // codebooks persist as a warehouse table like the indexes — a
     // cluster-visible location (executors of a real deployment write
     // parquet parts to the shared warehouse FS), where a driver-local

@@ -106,7 +106,7 @@ class PlanGateSpec extends SparkSpec {
     * a new accidental node in these queries (or any node in any other
     * query) still fails. Every entry's build/window leg is bounded by
     * KEY DOMAIN or construction, not data luck:
-    *  - ANN audits (q28/q40/q105/q117/q138/q139): the broadcast leg is
+    *  - ANN audits (q28/q40/q105/q117/q138): the broadcast leg is
     *    the ≤10-row audit query set (`vec_id < 10`) or a ≤k-row
     *    centroid table (aggregate over k assigned buckets) — both
     *    constant in corpus size, just not provable from plan shape.
@@ -133,7 +133,6 @@ class PlanGateSpec extends SparkSpec {
     "q105_ann_int8" -> 1,
     "q117_ann_recall_audit" -> 2,
     "q138_ann_recall_audit_sampled" -> 2,
-    "q139_index_lifecycle" -> 2,
     "q78_centroid_drift" -> 1,
     // KMV pair enumeration over the event-type DOMAIN (the q78
     // intended triangle): both legs are per-group one-row estimate

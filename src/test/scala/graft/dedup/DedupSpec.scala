@@ -700,6 +700,81 @@ class DedupSpec extends SparkSpec {
     assert(asym.keySet.map(_._1) == Set(101, 102, 104))
   }
 
+  test("rowBandKeys (the per-row probe keys) equal buildLshIndex's " +
+      "(id, band, sig) rows exactly: repeated shingles, short and NULL " +
+      "texts") {
+    val d = docs(
+      (1, "the cat sat on the mat and the cat sat on the mat again"),
+      (2, "two words"), // shorter than n: no rows
+      (3, null), // NULL text: no rows
+      (4, mut(base, 4)),
+      (5, "The CAT sat, on the   mat! " + base))
+    for ((k, b) <- Seq((16, 8), (16, 4), (12, 3))) {
+      def rows(f: org.apache.spark.sql.DataFrame) = f.collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getString(2))).sorted.toSeq
+      val agg = rows(Dedup.buildLshIndex(d, "id", "text", 3, k, b))
+      val perRow = rows(Dedup.rowBandKeys(
+        d.select(col("id"),
+          graft.text.TextAnalysis.shingleArray(col("text"), 3).as("sh")),
+        "sh", k, b).select("id", "band", "sig"))
+      assert(perRow == agg, s"k=$k b=$b")
+      assert(agg.map(_._1).toSet == Set(1, 4, 5))
+      assert(agg.size == 3 * b)
+    }
+  }
+
+  test("nearDupMatches runs without a persist and equals brute-force " +
+      "distinct-shingle Jaccard over every band-sharing pair") {
+    val baseA = "the quick brown fox jumps over the lazy dog while " +
+      "the patient cat watches from the warm window sill nearby " +
+      "and the evening light settles across the quiet garden path"
+    val baseB = "completely different content about distributed " +
+      "query engines shuffling partitions across executors while " +
+      "the optimizer prunes columns and pushes filters into scans"
+    val corpus = docs(
+      (1, mut(baseA, 1)), (2, mut(baseA, 2)), (3, mut(baseB, 3)),
+      (4, "short unrelated note about nothing in particular today"))
+    val batch = docs(
+      (101, mut(baseA, 101)), // near-dup of corpus 1 AND 2
+      (102, mut(baseB, 102) + " " + baseA), // shares bands, < 0.8
+      (103, "a wholly new document with fresh unseen vocabulary"),
+      (104, "tiny"))
+    val index = Dedup.buildLshIndex(corpus, "id", "text")
+    spark.catalog.clearCache()
+    val got = Dedup.nearDupMatches(corpus, index, batch, "id", "text")
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2))
+      .toMap
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "nearDupMatches left a cached frame behind")
+
+    def texts(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    def shingles(t: String): Set[String] =
+      "[a-z0-9]+".r.findAllIn(t.toLowerCase(java.util.Locale.ROOT))
+        .toSeq.sliding(3).filter(_.size == 3).map(_.mkString(" ")).toSet
+    def bandSets(d: org.apache.spark.sql.DataFrame) =
+      Dedup.buildLshIndex(d, "id", "text").collect()
+        .groupMap(_.getInt(0))(r => (r.getInt(1), r.getString(2)))
+        .view.mapValues(_.toSet).toMap
+    val (bt, ct) = (texts(batch), texts(corpus))
+    val shared = for {
+      (b, bb) <- bandSets(batch); (c, cb) <- bandSets(corpus)
+      n = (bb & cb).size if n > 0
+    } yield (b, c) -> n
+    val want = shared.keys.flatMap { case (b, c) =>
+      val (sb, sc) = (shingles(bt(b)), shingles(ct(c)))
+      val common = (sb & sc).size
+      val j = common.toDouble / (sb.size + sc.size - common).toDouble
+      if (j >= 0.8) Some((b, c) -> j) else None
+    }.toMap
+    assert(got == want, s"\ngot  = $got\nwant = $want")
+    assert(got.keySet == Set((101, 1), (101, 2)))
+    assert(shared((101, 1)) >= 2 && shared((101, 2)) >= 2,
+      s"the 101 pairs should share several bands: $shared")
+    assert(shared.keySet.exists(_._1 == 102),
+      "102 should reach verification and fail it")
+  }
+
   test("dedupNearAgainst: in-batch exact dup collapses, corpus " +
       "near-dups drop, fresh and batch-only-near-dup rows survive") {
     val baseA = "the quick brown fox jumps over the lazy dog while " +
