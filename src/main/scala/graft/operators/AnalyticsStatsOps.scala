@@ -2172,9 +2172,12 @@ private[graft] trait AnalyticsStatsOps { this: Analytics.type =>
     val lo = greatest(lit(0.0), m1 - n2)
     val hi = least(n1, m1)
     // ψ = 1 collapses the quadratic to linear: ã = ψn₁m₁ / B
-    val ea = when(abs(qA) < 1e-12, -(qC / qB))
+    val root = when(abs(qA) < 1e-12, -(qC / qB))
       .when(r1 >= lo - 1e-9 && r1 <= hi + 1e-9, r1)
       .otherwise(r2)
+    // ã is projected once as `__ea`; inlining the root into every
+    // term below grew the projection past the 64 KB codegen limit
+    val ea = col("__ea")
     val vInv = lit(1.0) / ea + lit(1.0) / (n1 - ea) +
       lit(1.0) / (m1 - ea) + lit(1.0) / (n2 - m1 + ea)
     val vr = lit(1.0) / vInv
@@ -2183,7 +2186,7 @@ private[graft] trait AnalyticsStatsOps { this: Analytics.type =>
       col("a") + col("c") > 0L && col("b") + col("d") > 0L
     val terms = per.crossJoin(broadcast(psiRow))
       .withColumn("__valid", valid)
-      .withColumn("__ea", when(col("__valid"), ea))
+      .withColumn("__ea", when(col("__valid"), root))
       .withColumn("__t_mu", when(col("__valid"),
         floor((dnum * dnum / vr) * 1e6).cast("long")).otherwise(0L))
       .withColumn("__d_mu", when(col("__valid"),

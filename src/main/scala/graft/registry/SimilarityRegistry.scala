@@ -1753,8 +1753,8 @@ private[graft] object SimilarityRegistry {
     * the residual x − c against each vector's assigned centroid — the
     * published IVF-ADC construction that spends the code budget on
     * local displacement. ADC scores cosine(q, c + r̂) from codes only,
-    * decomposed into per-(query, block, code) and per-(centroid,
-    * block, code) broadcast lookup tables. Fully deterministic, so
+    * decomposed into per-query and per-centroid (block, code) lookup
+    * tables. Fully deterministic, so
     * the oracle replays assignment, residual training, encoding,
     * routing AND the decomposed scoring.
     */

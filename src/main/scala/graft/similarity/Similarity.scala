@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *   - Brute-force broadcasts the (small) query side; the corpus — the
   *     100 TB side — never moves.
   *   - The IVF variant cuts the scanned corpus to ~nprobe/nlist of the
-  *     data: centroid assignment is a broadcast join, bucket search
-  *     shuffles only the probed buckets.
+  *     data: centroid assignment is a broadcast join; a search probes
+  *     each query row against the centroid literal and streams the
+  *     index into a broadcast join with the probed queries.
   *   - All rankings use rounded similarity + id tie-breaks, so results
   *     are reproducible across engines, partitionings, and runs.
   */
@@ -82,28 +83,43 @@ object Similarity {
         (col("__i") + 1).as("rank"))
   }
 
-  /** The coarse probe of every IVF search: each query's `nprobe`
-    * nearest centroids by rounded cosine (`csim DESC, centroid_id
-    * ASC`). One row per (query, probed centroid): (query_id, `extra`,
-    * __qv, __qn, centroid_id, centroid_vec); callers keep what they
-    * need and the optimizer prunes the rest before the window. The
-    * window sorts nlist rows per query — a bounded group.
+  /** The centroid table on the driver: (centroid_id, centroid_vec as
+    * array<double>, its norm, `extra`…), nlist rows — sized by the
+    * model, the rows a broadcast would ship; a necessary driver step
+    * like the k-means centroids (a local relation collects with no job).
+    */
+  private def centroidRows(cents: DataFrame, extra: Column*): Array[Row] =
+    cents.select(Seq(col("centroid_id"),
+      col("centroid_vec").cast("array<double>"),
+      norm(col("centroid_vec"))) ++ extra: _*).collect()
+
+  /** The coarse probe of every IVF search, a projection of each query
+    * row: its rounded cosine to every [[centroidRows]] centroid as
+    * `(isnull, −csim, id)` keys, sorted (`csim DESC NULLS LAST,
+    * centroid_id ASC`), cut to `nprobe` and exploded — no cross join,
+    * no window, no exchange. One row per (query, probed centroid):
+    * (query_id, `extra`, __qv, __qn, centroid_id, __ci = the centroid's
+    * position in `cents`); `extra` is computed once per query.
     */
   private def coarseProbe(
-      queries: DataFrame, cents: DataFrame, idCol: String, vecCol: String,
+      queries: DataFrame, cents: Array[Row], idCol: String, vecCol: String,
       nprobe: Int, roundTo: Int, extra: Seq[Column] = Nil): DataFrame = {
-    val centsN = broadcast(cents.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
-    val q = queries.select(col(idCol).as("query_id") +: extra :+
-      col(vecCol).as("__qv") :+ norm(col(vecCol)).as("__qn"): _*)
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    q.crossJoin(centsN)
-      .withColumn("csim", round(cosFromNorms(col("__qv"),
-        col("centroid_vec"), col("__qn"), col("__cn")), roundTo))
-      .withColumn("__r", row_number().over(pw))
-      .where(col("__r") <= nprobe)
-      .drop("__cn", "csim", "__r")
+    val ids = array(cents.map(r => lit(r.get(0))).toSeq: _*)
+    val norms = typedLit(cents.map(_.getAs[java.lang.Double](2)).toSeq)
+    val keys = transform(typedLit(cents.map(_.getSeq[Double](1)).toSeq),
+      (cv, i) => {
+        val csim = round(cosFromNorms(col("__qv"), cv, col("__qn"),
+          norms(i)), roundTo)
+        struct(isnull(csim).as("n"), (-csim).as("s"), ids(i).as("id"),
+          i.as("ci"))
+      })
+    queries.select(col(idCol).as("query_id") +: extra :+
+        col(vecCol).as("__qv") :+ norm(col(vecCol)).as("__qn"): _*)
+      .select(col("*"), explode(slice(sort_array(keys), 1, nprobe))
+        .as("__p"))
+      .select(col("*"), col("__p.id").as("centroid_id"),
+        col("__p.ci").as("__ci"))
+      .drop("__p")
   }
 
   /** ANN hard-negative mining for contrastive training: per query
@@ -142,8 +158,8 @@ object Similarity {
       roundTo: Int = 4): DataFrame = {
     val assigned = assignWithNorm(corpus, cents, idCol, vecCol,
       roundTo, extraCols = Seq(labelCol))
-    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe,
-        roundTo, extra = Seq(col(labelCol).as("query_label")))
+    val probed = coarseProbe(queries, centroidRows(cents), idCol, vecCol,
+        nprobe, roundTo, extra = Seq(col(labelCol).as("query_label")))
       .select("query_id", "query_label", "__qv", "__qn", "centroid_id")
     val bucketed = assigned.select(col("centroid_id"),
       col(idCol).as("neighbor_id"), col(labelCol).as("neighbor_label"),
@@ -491,7 +507,8 @@ object Similarity {
       queries: DataFrame, index: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
       k: Int, nprobe: Int, roundTo: Int = 4): DataFrame = {
-    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe, roundTo)
+    val probed = coarseProbe(queries, centroidRows(cents), idCol, vecCol,
+        nprobe, roundTo)
       .select("query_id", "__qv", "__qn", "centroid_id")
     // search only the probed buckets; norms reused from assignment
     val bucketed = index.select(col("centroid_id"),
@@ -1043,10 +1060,10 @@ object Similarity {
       codebooks: DataFrame): DataFrame = {
     val cb = broadcast(codebooks.select(col("block"), col("code"),
       col("codeword"), dot(col("codeword"), col("codeword")).as("__cc")))
-    val (m, sub) = pqLayout(codebooks, df, vecCol)
+    val pq = pqLayout(codebooks)
     val v = col(vecCol).cast("array<double>")
     val exploded = df.select(col(idCol),
-      subBlocks(v, m, sub).as(Seq("__blk", "__sub")))
+      subBlocks(v, pq.m, pq.sub).as(Seq("__blk", "__sub")))
     // ‖x_b − c‖² = x·x − 2 x·c + c·c; x·x is constant per (row, block)
     // → argmin needs only c·c − 2 x·c
     val d2 = col("__cc") - lit(2.0) * dot(col("__sub"), col("codeword"))
@@ -1083,14 +1100,14 @@ object Similarity {
   }
 
   /** PQ asymmetric-distance (ADC) top-k: cosine(q, x̂) computed from
-    * CODES ONLY — dot and squared norm decompose over blocks
+    * CODES ONLY. Dot and squared norm decompose over blocks
     * (dot(q, x̂) = Σ_b dot(q_b, cw), ‖x̂‖² = Σ_b ‖cw‖²), so each query
-    * builds an m·k lookup table of block contributions and every
-    * encoded corpus vector is scored by m lookups + a sum. The corpus
-    * side carries (id, block, code) rows — never vectors; the
-    * per-query table is queries·m·k rows, broadcast-sized.
+    * row carries its m·k lookup table ([[adcTable]]) and every encoded
+    * corpus vector is scored by one per-row fold of m lookups
+    * ([[adcFold]]). The corpus side carries (id, codes), never vectors,
+    * and nothing is joined to a lookup table or regrouped per pair.
     * Equal to cosine against [[pqReconstruct]]'d vectors up to
-    * double-summation order (spec-pinned at 1e-9) — the decomposition
+    * double-summation order (spec-pinned at 1e-9): the decomposition
     * is exact, the approximation is all in the ENCODING.
     *
     * Scoring here is EXHAUSTIVE (every encoded vector × every query —
@@ -1102,21 +1119,14 @@ object Similarity {
       queries: DataFrame, encoded: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, k: Int,
       roundTo: Int = 4): DataFrame = {
-    val (_, _, lut) = adcTable(queries, codebooks, idCol, vecCol)
-    val corpusCodes = encoded.select(col(idCol).as("neighbor_id"),
-      posexplode(col("codes")).as(Seq("__blk", "__code")))
-    val sims = corpusCodes
-      .join(lut, col("__blk") === col("block") &&
-        col("__code") === col("code"))
-      .groupBy(col("__lq").as("query_id"), col("neighbor_id"))
-      .agg(blockParts(col("__blk"), "dq" -> col("__dq"),
-          "cc" -> col("__cc")),
-        first(col("__qn")).as("__qn1"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(foldParts("dq") / nullif(
-          col("__qn1") * sqrt(foldParts("cc")), lit(0.0)), roundTo)
-          .as("sim"))
+    val pq = pqLayout(codebooks)
+    val qv = col(vecCol).cast("array<double>")
+    val q = queries.select(col(idCol).as("query_id"),
+      norm(qv).as("__qn"), adcTable(qv, pq).as("__lut"))
+    val sims = encoded.crossJoin(broadcast(q))
+      .where(col("query_id") =!= col(idCol))
+      .select(col("query_id"), col(idCol).as("neighbor_id"),
+        adcCosine(pq, roundTo).as("sim"))
     rankTopK(sims, k, encoded.schema(idCol).dataType)
   }
 
@@ -1127,52 +1137,54 @@ object Similarity {
     posexplode(transform(sequence(lit(0), lit(m - 1)), b =>
       slice(v, b * sub + lit(1), lit(sub))))
 
-  /** PQ layout: the block count `m` (from the codebooks) and the
-    * sub-block width (from `df`'s vector dimension) — two one-row
-    * actions.
+  /** The codebooks on the driver, per block in code order: codewords
+    * `words(b)(c)` of length `sub` and their ‖cw‖² `cc(b)(c)`. A block
+    * may hold fewer codes than asked for: training drops a codeword
+    * left with no members.
     */
-  private def pqLayout(
-      codebooks: DataFrame, df: DataFrame, vecCol: String): (Int, Int) = {
-    val m = codebooks.select(max("block")).head().getInt(0) + 1
-    val dim = vectorDim(df, vecCol)
-    require(dim % m == 0, s"dim $dim must be divisible by m = $m")
-    (m, dim / m)
+  private final case class PqLayout(m: Int, sub: Int,
+      words: Seq[Seq[Seq[Double]]], cc: Seq[Seq[Double]])
+
+  /** Collect the codebooks once per call — model-sized, like
+    * [[centroidRows]]. Block b must hold codes 0 until its size, as
+    * [[pqTrainCodebooks]] numbers them.
+    */
+  private def pqLayout(codebooks: DataFrame): PqLayout = {
+    val blocks = codebooks.select(col("block").cast("int"),
+        col("code").cast("int"), col("codeword").cast("array<double>"),
+        dot(col("codeword"), col("codeword")))
+      .collect().sortBy(r => (r.getInt(0), r.getInt(1)))
+      .toSeq.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+    require(blocks.nonEmpty && blocks.indices.forall(b =>
+        blocks(b)._1 == b && blocks(b)._2.indices.forall(c =>
+          blocks(b)._2(c).getInt(1) == c)),
+      "codebooks must hold codes 0 until n_b for every block 0 until m")
+    val rows = blocks.map(_._2)
+    PqLayout(rows.size, rows.head.head.getSeq[Double](2).length,
+      rows.map(_.map(_.getSeq[Double](2).toSeq)),
+      rows.map(_.map(_.getDouble(3))))
   }
 
-  /** The per-(query, block, code) ADC lookup table of every PQ search:
-    * (__lq, __qn, block, code, __dq = dot(q_b, cw), __cc = ‖cw‖²) —
-    * queries·m·k rows, broadcast. Returns (m, sub-block width, table).
+  /** A vector's ADC lookup table, a projection of its row: entry
+    * (b)(c) is dot(v_b, cw) for block b's code c.
     */
-  private def adcTable(
-      queries: DataFrame, codebooks: DataFrame,
-      idCol: String, vecCol: String): (Int, Int, DataFrame) = {
-    val (m, sub) = pqLayout(codebooks, queries, vecCol)
-    val qv = col(vecCol).cast("array<double>")
-    val lut = broadcast(queries
-      .select(col(idCol).as("__lq"), norm(qv).as("__qn"),
-        subBlocks(qv, m, sub).as(Seq("__blk", "__qsub")))
-      .join(broadcast(codebooks), col("__blk") === col("block"))
-      .select(col("__lq"), col("__qn"), col("block"), col("code"),
-        dot(col("__qsub"), col("codeword")).as("__dq"),
-        dot(col("codeword"), col("codeword")).as("__cc")))
-    (m, sub, lut)
-  }
+  private def adcTable(v: Column, pq: PqLayout): Column =
+    transform(typedLit(pq.words), (words, b) => transform(words,
+      cw => dot(slice(v, b * pq.sub + lit(1), lit(pq.sub)), cw)))
 
-  /** A (query, neighbor) group's per-block ADC terms as `__parts`,
-    * sorted by block (`b`), ready for [[foldParts]].
+  /** Σ_b table(b)(codes[b]), summed LEFT-TO-RIGHT in block order from
+    * 0.0 — a plain sum() adds in arrival order and can differ from a
+    * fixed summation by an ulp, which a cross-engine compare would
+    * see; the oracles replay exactly this fold.
     */
-  private def blockParts(block: Column, fields: (String, Column)*): Column =
-    array_sort(collect_list(struct(block.as("b") +:
-      fields.map { case (n, c) => c.as(n) }: _*))).as("__parts")
+  private def adcFold(table: Column, pq: PqLayout): Column =
+    aggregate(sequence(lit(0), lit(pq.m - 1)), lit(0.0), (acc, b) =>
+      acc + table(b)(col("codes")(b)))
 
-  /** Sum one field of `__parts` LEFT-TO-RIGHT in block order — a plain
-    * sum() aggregates in arrival order and can differ from a fixed
-    * summation by an ulp, which a cross-engine compare would see; the
-    * oracles replay exactly this fold.
-    */
-  private def foldParts(field: String): Column = aggregate(
-    transform(col("__parts"), p => p.getField(field)),
-    lit(0.0), (acc, x) => acc + x)
+  /** Rounded ADC cosine of a candidate row (`__lut`, `__qn`, `codes`). */
+  private def adcCosine(pq: PqLayout, roundTo: Int): Column =
+    round(adcFold(col("__lut"), pq) / nullif(col("__qn") *
+      sqrt(adcFold(typedLit(pq.cc), pq)), lit(0.0)), roundTo)
 
   // ---------------------------------------------------------------- //
   // IVF-PQ (coarse routing over PQ codes)                             //
@@ -1241,10 +1253,12 @@ object Similarity {
     * (same rounded-cosine ranking as [[ivfTopK]]) and ADC-scores ONLY
     * the codes assigned to those buckets. The scored-row count is
     * Σ(probed bucket sizes) per query — ~nprobe/nlist of the corpus —
-    * instead of [[pqTopK]]'s corpus × queries; the shuffle never
-    * carries vectors, only (query, neighbor, block, code) rows from
-    * the probed buckets. Per-pair similarity is IDENTICAL to
-    * [[pqTopK]]'s (same LUT decomposition, same block-ordered fold,
+    * instead of [[pqTopK]]'s corpus × queries. Probe and lookup table
+    * are projections of each query row ([[coarseProbe]],
+    * [[adcTable]]); the index streams into a broadcast join on
+    * `centroid_id` and each candidate is scored by one per-row fold,
+    * so the only shuffle is [[rankTopK]]'s. Per-pair similarity is
+    * IDENTICAL to [[pqTopK]]'s (same table, same block-ordered fold,
     * spec-pinned); the routing adds the standard IVF recall trade —
     * a true neighbor encoded into an unprobed bucket is missed, and
     * `nprobe = nlist` degrades to exactly [[pqTopK]] over the index.
@@ -1350,17 +1364,18 @@ object Similarity {
   }
 
   /** Residual IVF-PQ top-k: coarse routing as [[ivfPqTopK]], ADC
-    * scoring of cosine(q, c + r̂) decomposed entirely into
-    * broadcast-sized lookup tables —
+    * scoring of cosine(q, c + r̂) decomposed entirely into lookup
+    * tables —
     *
     *   dot(q, x̂)  = dot(q, c) + Σ_b dot(q_b, cw_b)
     *   ‖x̂‖²       = ‖c‖² + 2·Σ_b dot(c_b, cw_b) + Σ_b ‖cw_b‖²
     *
-    * so the per-pair work is m lookups against a per-(query, block,
-    * code) table plus m against a per-(CENTROID, block, code) cross
-    * table (nlist·m·k rows — centroid-dependent but corpus-size-
-    * independent), both broadcast; the streamed index side carries
-    * only (centroid, id, codes). All folds run in block order
+    * so the per-pair work is three per-row folds of m lookups: into
+    * the query's table, into the probed CENTROID's table of
+    * dot(c_b, cw) (nlist·m·k values in the centroid literal —
+    * centroid-dependent but corpus-size-independent) and into the
+    * ‖cw‖² table; the streamed index side carries only (centroid, id,
+    * codes). All folds run in block order
     * (left-assoc), so the oracle can replay the exact float
     * arithmetic. Equal to cosine against the reconstructed c + r̂ up
     * to the decomposition's summation order (spec-pinned at 1e-9);
@@ -1421,40 +1436,29 @@ object Similarity {
       codebooks: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
       nprobe: Int, roundTo: Int): DataFrame = {
-    val (m, sub, qlut) = adcTable(queries, codebooks, idCol, vecCol)
-    // routing + per-(query, centroid) dot(q, c) on the probed rows
-    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe, roundTo)
-      .select(col("query_id"), col("__qn"), col("centroid_id"),
-        dot(col("__qv"), col("centroid_vec")).as("__qc"))
-    // per-(centroid, block, code): dot(c_b, cw) — nlist·m·k rows
+    val pq = pqLayout(codebooks)
+    // per centroid: ‖c‖² and its own table of dot(c_b, cw)
     val cv = col("centroid_vec").cast("array<double>")
-    val clut = broadcast(cents
-      .select(col("centroid_id").as("__lc"), dot(cv, cv).as("__cn2"),
-        subBlocks(cv, m, sub).as(Seq("__blk", "__csub")))
-      .join(broadcast(codebooks), col("__blk") === col("block"))
-      .select(col("__lc"), col("__cn2"), col("block").as("__cb"),
-        col("code").as("__ck"), dot(col("__csub"), col("codeword"))
-          .as("__cx")))
-
+    val cr = centroidRows(cents, dot(cv, cv), adcTable(cv, pq))
+    val ci = col("__ci")
+    val qv = col(vecCol).cast("array<double>")
+    val probed = coarseProbe(queries, cr, idCol, vecCol, nprobe, roundTo,
+        extra = Seq(adcTable(qv, pq).as("__lut")))
+      .select(col("query_id"), col("__qn"), col("__lut"),
+        col("centroid_id"), dot(col("__qv"),
+          typedLit(cr.map(_.getSeq[Double](1)).toSeq).getItem(ci))
+          .as("__qc"),
+        typedLit(cr.map(_.getAs[java.lang.Double](3)).toSeq).getItem(ci)
+          .as("__cn2"),
+        typedLit(cr.map(_.getSeq[collection.Seq[Double]](4)).toSeq)
+          .getItem(ci).as("__cx"))
     index.join(broadcast(probed), Seq("centroid_id"))
       .where(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col("__qn"), col("__qc"),
-        col("centroid_id"), col(idCol).as("neighbor_id"),
-        posexplode(col("codes")).as(Seq("__kblk", "__kcode")))
-      .join(qlut.drop("__qn"), col("query_id") === col("__lq") &&
-        col("__kblk") === col("block") && col("__kcode") === col("code"))
-      .join(clut, col("centroid_id") === col("__lc") &&
-        col("__kblk") === col("__cb") && col("__kcode") === col("__ck"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(blockParts(col("__kblk"), "dq" -> col("__dq"),
-          "cx" -> col("__cx"), "ww" -> col("__cc")),
-        first(col("__qn")).as("__qn1"),
-        first(col("__qc")).as("__qc1"),
-        first(col("__cn2")).as("__cn21"))
-      .select(col("query_id"), col("neighbor_id"),
-        round((col("__qc1") + foldParts("dq")) / nullif(
-          col("__qn1") * sqrt(col("__cn21") +
-            lit(2.0) * foldParts("cx") + foldParts("ww")),
+      .select(col("query_id"), col(idCol).as("neighbor_id"),
+        round((col("__qc") + adcFold(col("__lut"), pq)) / nullif(
+          col("__qn") * sqrt(col("__cn2") +
+            lit(2.0) * adcFold(col("__cx"), pq) +
+            adcFold(typedLit(pq.cc), pq)),
           lit(0.0)), roundTo).as("sim"))
   }
 
@@ -1469,26 +1473,17 @@ object Similarity {
       codebooks: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
       nprobe: Int, roundTo: Int): DataFrame = {
-    val (_, _, lut) = adcTable(queries, codebooks, idCol, vecCol)
-    val probed = coarseProbe(queries, cents, idCol, vecCol, nprobe, roundTo)
-      .select("query_id", "centroid_id")
+    val pq = pqLayout(codebooks)
+    val qv = col(vecCol).cast("array<double>")
+    val probed = coarseProbe(queries, centroidRows(cents), idCol, vecCol,
+        nprobe, roundTo, extra = Seq(adcTable(qv, pq).as("__lut")))
+      .select("query_id", "__qn", "__lut", "centroid_id")
     // candidates: ONLY the probed buckets' codes — the index side
     // streams, the (queries·nprobe)-row probe table broadcasts
     index.join(broadcast(probed), Seq("centroid_id"))
       .where(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("codes"))
-      .select(col("query_id"), col("neighbor_id"),
-        posexplode(col("codes")).as(Seq("__cblk", "__ccode")))
-      .join(lut, col("query_id") === col("__lq") &&
-        col("__cblk") === col("block") && col("__ccode") === col("code"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(blockParts(col("__cblk"), "dq" -> col("__dq"),
-          "cc" -> col("__cc")),
-        first(col("__qn")).as("__qn1"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(foldParts("dq") / nullif(
-          col("__qn1") * sqrt(foldParts("cc")), lit(0.0)), roundTo)
-          .as("sim"))
+      .select(col("query_id"), col(idCol).as("neighbor_id"),
+        adcCosine(pq, roundTo).as("sim"))
   }
 
   /** First non-null vector's length — index-build-time probe (one

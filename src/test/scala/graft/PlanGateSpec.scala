@@ -106,8 +106,8 @@ class PlanGateSpec extends SparkSpec {
     * a new accidental node in these queries (or any node in any other
     * query) still fails. Every entry's build/window leg is bounded by
     * KEY DOMAIN or construction, not data luck:
-    *  - ANN audits (q28/q40/q105/q117/q138): the broadcast leg is
-    *    the ≤10-row audit query set (`vec_id < 10`) or a ≤k-row
+    *  - ANN audits (q28/q40/q105/q112/q117/q138): the broadcast leg
+    *    is the ≤10-row audit query set (`vec_id < 10`) or a ≤k-row
     *    centroid table (aggregate over k assigned buckets) — both
     *    constant in corpus size, just not provable from plan shape.
     *  - q78: pairwise cosine over per-label centroids (≤ label-domain
@@ -131,6 +131,9 @@ class PlanGateSpec extends SparkSpec {
     "q207_matryoshka_audit" -> 2,
     "q40_ann_kmedians" -> 2,
     "q105_ann_int8" -> 1,
+    // pqTopK's exhaustive ADC scan: the q28 shape over codes, each
+    // query row carrying its lookup table across the broadcast
+    "q112_ann_pq" -> 1,
     "q117_ann_recall_audit" -> 2,
     "q138_ann_recall_audit_sampled" -> 2,
     "q78_centroid_drift" -> 1,

@@ -194,8 +194,7 @@ class IvfPqSpec extends SparkSpec {
       case _ => j.right
     }
     // shuffles on the STREAMED path only — a broadcast build side may
-    // legitimately contain exchanges (the queries·nprobe probe routing
-    // is windowed over an exchange before it broadcasts)
+    // legitimately contain exchanges
     def streamShuffles(p: SparkPlan): Seq[SparkPlan] = p match {
       case _: org.apache.spark.sql.execution.exchange
           .BroadcastExchangeLike => Seq.empty
@@ -280,5 +279,92 @@ class IvfPqSpec extends SparkSpec {
             books),
           books, cents, "vec_id", "embedding", k = 5, nprobe = 2)))
     } finally spark.sql("DROP TABLE IF EXISTS ivfpq_idx_spec")
+  }
+
+  test("one local query: no job while the frame is built, at most 3 " +
+      "on collect, and sims equal a plain-Scala replay bit for bit") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val d = clustered(120, 16, 6, seed = 31)
+    def local(x: org.apache.spark.sql.DataFrame) = spark.createDataFrame(
+      java.util.Arrays.asList(x.collect(): _*), x.schema)
+    val books = local(Similarity.pqTrainCodebooks(d, "vec_id", "embedding",
+      m = 4, k = 8, exactMedian = true))
+    val cents = local(Similarity.hashKCentroids(d, "vec_id", "embedding", 6))
+    val qRow = d.where(col("vec_id") === 5).collect().head
+    val q = spark.createDataFrame(java.util.Arrays.asList(qRow), schema)
+    val (k, nprobe) = (10, 2)
+    val sc = spark.sparkContext
+    val group = "ivfpq-one-query"
+    val jobs = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) jobs.add(e.jobId)
+    }
+    // the listener bus delivers asynchronously — poll until stable
+    def settled(): Int = {
+      var (last, same) = (-1, 0)
+      while (same < 5) {
+        val n = jobs.size
+        if (n == last) same += 1 else { same = 0; last = n }
+        Thread.sleep(100)
+      }
+      last
+    }
+    try {
+      Similarity.pqBuildIvfIndex(d, "vec_id", "embedding", cents, books,
+        "ivfpq_one_query_spec", numBuckets = 4)
+      val index = spark.table("ivfpq_one_query_spec")
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      val (frame, got) = try {
+        val f = Similarity.ivfPqTopK(q, index, books, cents, "vec_id",
+          "embedding", k = k, nprobe = nprobe)
+        val built = settled()
+        assert(built == 0, s"building the frame ran $built jobs")
+        (f, f.collect().sortBy(_.getInt(3)))
+      } finally sc.clearJobGroup()
+      val onCollect = settled()
+      assert(onCollect <= 3, s"collect ran $onCollect jobs")
+      assert(frame.columns.toSeq ==
+        Seq("query_id", "neighbor_id", "sim", "rank"))
+
+      // replay: left-to-right dots, block sums in order, Spark's
+      // HALF_UP rounding of the decimal string
+      def dot(a: Seq[Double], b: Seq[Double]) =
+        a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+      def r4(x: Double) = BigDecimal(x)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val qv = qRow.getSeq[Double](1).toIndexedSeq
+      val qn = math.sqrt(dot(qv, qv))
+      val probed = cents.collect().toSeq.map { r =>
+        val cv = r.getSeq[Double](1)
+        (r4(dot(qv, cv) / (qn * math.sqrt(dot(cv, cv)))), r.getInt(0))
+      }.sortBy { case (s, id) => (-s, id) }.take(nprobe).map(_._2).toSet
+      val word = books.collect().map(r =>
+        (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
+      val sub = 16 / 4
+      val want = index.collect().toSeq
+        .filter(r => probed(r.getInt(0)) && r.getInt(1) != 5)
+        .map { r =>
+          val codes = r.getSeq[Int](2)
+          val (dq, cc) = codes.indices.foldLeft((0.0, 0.0)) {
+            case ((dq, cc), b) =>
+              val cw = word((b, codes(b)))
+              (dq + dot(qv.slice(b * sub, (b + 1) * sub), cw),
+                cc + dot(cw, cw))
+          }
+          (r.getInt(1), r4(dq / (qn * math.sqrt(cc))))
+        }
+        .sortBy { case (id, s) => (-s, id) }.take(k)
+      assert(want.size == k)
+      assert(got.toSeq.map(r => (r.getInt(1), r.getDouble(2))) == want)
+      assert(got.forall(_.getInt(0) == 5))
+      assert(got.map(_.getInt(3)).toSeq == (1 to k))
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.sql("DROP TABLE IF EXISTS ivfpq_one_query_spec")
+    }
   }
 }

@@ -655,4 +655,71 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => b - 1000 == a },
       s"false positives in $pairs")
   }
+
+  test("the coarse probe equals the window/row_number probe: ties on " +
+      "rounded csim go to the smaller id, NULL csims (a zero-norm " +
+      "query, a NULL centroid vector) rank last, nprobe > nlist probes " +
+      "all — in ivfTopK, hardNegatives and ivfPqTopK") {
+    val cs = StructType(Seq(StructField("centroid_id", IntegerType),
+      StructField("centroid_vec", ArrayType(DoubleType))))
+    def at(a: Double) = Seq(math.cos(a), math.sin(a))
+    // 3 and 7 round to the same csim against (1, 0), 7 is nearer raw
+    val cents = df(cs, Seq(5 -> at(0.1), 7 -> at(0.3), 3 -> at(-0.30001),
+        1 -> at(1.0), 9 -> at(2.0), 2 -> at(math.Pi), 4 -> null)
+      .map { case (i, v) => Row(i, v) })
+    val qs = StructType(Seq(StructField("vec_id", IntegerType),
+      StructField("embedding", ArrayType(DoubleType)),
+      StructField("label", StringType)))
+    val queries = df(qs, Seq(Row(100, Seq(1.0, 0.0), "q"),
+      Row(101, Seq(0.0, 0.0), "q"), Row(102, Seq(0.0, 1.0), "q"),
+      Row(103, Seq(-1.0, 0.2), "q")))
+    // one marker row per centroid, at the centroid itself; the NULL
+    // centroid 4 keeps an empty bucket
+    val markers = df(qs, cents.collect().toSeq.filter(!_.isNullAt(1))
+      .map(r => Row(1000 + r.getInt(0), r.getSeq[Double](1), "c")))
+    val index = Similarity.annIndexRows(markers, "vec_id", "embedding",
+      cents)
+    val bucketOf = index.select("vec_id", "centroid_id").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(bucketOf.forall { case (id, c) => id - 1000 == c })
+    val books = df(StructType(Seq(StructField("block", IntegerType),
+        StructField("code", IntegerType),
+        StructField("codeword", ArrayType(DoubleType)))),
+      Seq(Row(0, 0, Seq(1.0)), Row(0, 1, Seq(-1.0)),
+        Row(1, 0, Seq(1.0)), Row(1, 1, Seq(-1.0))))
+    val pqIndex = Similarity.ivfPqAssignCodes(markers, "vec_id",
+      "embedding", cents, books)
+
+    def windowProbe(nprobe: Int): Set[(Int, Int)] = {
+      val w = Window.partitionBy("query_id")
+        .orderBy(col("csim").desc, col("centroid_id").asc)
+      queries.select(col("vec_id").as("query_id"), col("embedding"))
+        .crossJoin(cents)
+        .withColumn("csim", round(Similarity.cosine(col("embedding"),
+          col("centroid_vec")), 4))
+        .withColumn("r", row_number().over(w))
+        .where(col("r") <= nprobe)
+        .select("query_id", "centroid_id").collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSet
+    }
+    def probed(out: DataFrame, neighbor: String): Set[(Int, Int)] =
+      out.select(col("query_id"), col(neighbor)).collect()
+        .map(r => (r.getInt(0), bucketOf(r.getInt(1)))).toSet
+
+    assert(windowProbe(2).filter(_._1 == 100) == Set(100 -> 5, 100 -> 3))
+    assert(windowProbe(2).filter(_._1 == 101) == Set(101 -> 1, 101 -> 2))
+    for (nprobe <- Seq(1, 2, 3, 10)) {
+      assert(windowProbe(nprobe).size == 4 * math.min(nprobe, 7))
+      val want = windowProbe(nprobe).filter(_._2 != 4)
+      assert(probed(Similarity.ivfTopK(queries, index, cents, "vec_id",
+        "embedding", k = 100, nprobe = nprobe), "neighbor_id") == want,
+        s"ivfTopK, nprobe $nprobe")
+      assert(probed(Similarity.hardNegatives(queries, markers, "vec_id",
+        "embedding", "label", k = 100, cents, nprobe = nprobe),
+        "neighbor_id") == want, s"hardNegatives, nprobe $nprobe")
+      assert(probed(Similarity.ivfPqTopK(queries, pqIndex, books, cents,
+        "vec_id", "embedding", k = 100, nprobe = nprobe),
+        "neighbor_id") == want, s"ivfPqTopK, nprobe $nprobe")
+    }
+  }
 }
