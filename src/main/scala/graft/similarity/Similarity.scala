@@ -56,6 +56,16 @@ object Similarity {
       va: Column, vb: Column, na: Column, nb: Column): Column =
     dot(va, vb) / nullif(na * nb, lit(0.0))
 
+  /** The rounded cosine every centroid ranking orders by. A NaN (a
+    * vector with a NaN component) becomes NULL, so it ranks last in
+    * `csim DESC NULLS LAST` just as a zero norm does — Spark would
+    * otherwise order NaN above every number.
+    */
+  private def centroidSim(
+      va: Column, vb: Column, na: Column, nb: Column, roundTo: Int): Column =
+    nanvl(round(cosFromNorms(va, vb, na, nb), roundTo),
+      lit(null).cast("double"))
+
   /** Rank scored (query_id, neighbor_id, sim) rows to top-k per query
     * via the bounded-heap aggregate [[graft.expressions.TopKByScore]] —
     * partial state is k entries per (query, partition), so the shuffle
@@ -96,7 +106,8 @@ object Similarity {
   /** The coarse probe of every IVF search, a projection of each query
     * row: its rounded cosine to every [[centroidRows]] centroid as
     * `(isnull, −csim, id)` keys, sorted (`csim DESC NULLS LAST,
-    * centroid_id ASC`), cut to `nprobe` and exploded — no cross join,
+    * centroid_id ASC`, a NaN csim is NULL as in [[assignWithNorm]]),
+    * cut to `nprobe` and exploded — no cross join,
     * no window, no exchange. One row per (query, probed centroid):
     * (query_id, `extra`, __qv, __qn, centroid_id, __ci = the centroid's
     * position in `cents`); `extra` is computed once per query.
@@ -108,8 +119,8 @@ object Similarity {
     val norms = typedLit(cents.map(_.getAs[java.lang.Double](2)).toSeq)
     val keys = transform(typedLit(cents.map(_.getSeq[Double](1)).toSeq),
       (cv, i) => {
-        val csim = round(cosFromNorms(col("__qv"), cv, col("__qn"),
-          norms(i)), roundTo)
+        val csim = centroidSim(col("__qv"), cv, col("__qn"), norms(i),
+          roundTo)
         struct(isnull(csim).as("n"), (-csim).as("s"), ids(i).as("id"),
           i.as("ci"))
       })
@@ -301,8 +312,8 @@ object Similarity {
       .select(carry :+ norm(col(vecCol)).as("__vn"): _*)
       .crossJoin(cents)
       .select(carry ++ Seq(col("__vn"), col("centroid_id"),
-        round(cosFromNorms(col(vecCol), col("centroid_vec"),
-          col("__vn"), col("__cn")), roundTo).as("csim")): _*)
+        centroidSim(col(vecCol), col("centroid_vec"), col("__vn"),
+          col("__cn"), roundTo).as("csim")): _*)
     val w = Window.partitionBy(idCol)
       .orderBy(col("csim").desc, col("centroid_id").asc)
     scored.withColumn("__r", row_number().over(w))
@@ -651,8 +662,8 @@ object Similarity {
       .select(col(idCol), col(vecCol), norm(col(vecCol)).as("__vn"))
       .crossJoin(cents)
       .select(col(idCol), col("centroid_id"),
-        round(cosFromNorms(col(vecCol), col("centroid_vec"),
-          col("__vn"), col("__cn")), roundTo).as("csim"))
+        centroidSim(col(vecCol), col("centroid_vec"), col("__vn"),
+          col("__cn"), roundTo).as("csim"))
     // window ranking: the vector × centroid score table partitions by
     // vector (tiny groups = centroid count), so the sort is bounded and
     // stays codegen'd — measured faster here than the heap-aggregate
@@ -756,8 +767,8 @@ object Similarity {
             .orderBy(col("__csim2").desc, col("__c2").asc)
           val big2 = big.crossJoin(c2)
             .withColumn("__csim2",
-              round(cosFromNorms(col(vecCol), col("__cv2"),
-                col("__vn"), col("__cn2")), roundTo))
+              centroidSim(col(vecCol), col("__cv2"), col("__vn"),
+                col("__cn2"), roundTo))
             .withColumn("__r2", row_number().over(w))
             .where(col("__r2") === 1)
             .select(col(idCol), col(vecCol), col("__vn"),
@@ -1017,8 +1028,8 @@ object Similarity {
           norm(col("__sub")).as("__vn"))
         .join(centsN, col("__blk") === col("__cb"))
         .select(col(idCol), col("__blk"), col("__sub"), col("centroid_id"),
-          round(cosFromNorms(col("__sub"), col("centroid_vec"),
-            col("__vn"), col("__cn")), roundTo).as("csim"))
+          centroidSim(col("__sub"), col("centroid_vec"), col("__vn"),
+            col("__cn"), roundTo).as("csim"))
         .withColumn("__r", row_number().over(w))
         .where(col("__r") === 1)
       val med =
@@ -1755,16 +1766,13 @@ object Similarity {
     * such candidate would lock the running max-cosine to NaN and
     * floor(NaN)→0 would silently corrupt all later picks.
     *
-    * Shape: k−1 unrolled rounds; each round's pick frame is ONE row
-    * per query (`groupBy(query).agg(min_by …)`) joined back on the
-    * query key to update the running max-cosine — an equi-join both
-    * sides of which are hash-partitioned on the query key, so rounds
-    * reuse one partitioning; no crossJoin, no global argmax. State
-    * per round is the candidate frame itself (queries × topN rows —
-    * rerank-sized per query by construction). Groups that exhaust
-    * before round k simply stop producing pick rows (grouped
-    * aggregation emits nothing for an absent group), so short
-    * candidate lists yield short result lists, never null ranks.
+    * Shape: one grouped pass. `groupBy(query)` collects each query's
+    * candidates as an id-sorted array of (id, vector, norm, rel)
+    * structs, and [[mmrGreedy]] runs all k rounds over that array in
+    * plain Scala — no per-round job, no checkpoint, no union. The
+    * per-group state is the query's candidate list, topN rows by
+    * construction (the reranker's input, not the corpus). A list
+    * shorter than k yields exactly its candidates, never null ranks.
     *
     * Output: (rank, queryCol, idCol, rel, max_cos_prior, obj_micro),
     * rank 1..k per query.
@@ -1773,13 +1781,11 @@ object Similarity {
       candidates: DataFrame, queryCol: String, idCol: String,
       vecCol: String, relCol: String, k: Int,
       lambdaMilli: Int = 700): DataFrame = {
-    require(k >= 1 && k <= 1000,
-      "k unrolled rounds: rerank-sized k only")
+    require(k >= 1, "k must be positive")
     require(lambdaMilli >= 0 && lambdaMilli <= 1000,
       "lambdaMilli is per-mill")
-    val lam = lambdaMilli / 1000.0
-    val mu = (1000 - lambdaMilli) / 1000.0
-    val base = candidates.select(col(queryCol).as("__g"),
+    val greedy = udf((pool: Seq[Row]) => mmrGreedy(pool, k, lambdaMilli))
+    candidates.select(col(queryCol).as("__g"),
         col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"),
         col(relCol).cast("double").as("__rel"))
@@ -1787,39 +1793,66 @@ object Similarity {
         col("__rel").isNotNull)
       .withColumn("__n", sqrt(dot(col("__v"), col("__v"))))
       .where(col("__n") > lit(0.0)) // the zero-norm NaN guard
-      .withColumn("__mc", lit(0.0))
-    def obj = lit(lam) * col("__rel") - lit(mu) * col("__mc")
-    def objMicro = floor(obj * lit(1000000L)).cast("long")
-    var cur = base.localCheckpoint()
-    var out = Seq.empty[DataFrame]
-    for (r <- 1 to k) {
-      val pick = cur
-        .withColumn("__obj", objMicro)
-        .groupBy(col("__g"))
-        .agg(min_by(struct(col("__id"), col("__v"), col("__n"),
-            col("__rel"), col("__mc"), col("__obj")),
-          struct((-col("__obj")).as("__nobj"), col("__id"))).as("__s"))
-        .select(col("__g"), col("__s.__id").as("__cid"),
-          col("__s.__v").as("__cv"), col("__s.__n").as("__cn"),
-          col("__s.__rel").as("__crel"), col("__s.__mc").as("__cmc"),
-          col("__s.__obj").as("__cobj"))
-        .localCheckpoint() // two consumers: output + next-round update
-      out :+= pick.select(lit(r).as("rank"), col("__g").as(queryCol),
-        col("__cid").as(idCol), col("__crel").as("rel"),
-        col("__cmc").as("max_cos_prior"), col("__cobj").as("obj_micro"))
-      if (r < k)
-        cur = cur
-          .join(pick.select(col("__g"), col("__cid"), col("__cv"),
-            col("__cn")), Seq("__g"))
-          .where(col("__id") =!= col("__cid"))
-          .select(col("__g"), col("__id"), col("__v"), col("__n"),
-            col("__rel"),
-            greatest(col("__mc"),
-              dot(col("__v"), col("__cv")) / (col("__n") * col("__cn")))
-              .as("__mc"))
-          .localCheckpoint()
+      .groupBy(col("__g"))
+      .agg(sort_array(collect_list(struct(col("__id"), col("__v"),
+        col("__n"), col("__rel")))).as("__c"))
+      .select(col("__g"), col("__c"),
+        posexplode(greedy(col("__c"))).as(Seq("__r", "__p")))
+      .select(col("__r"), col("__g"), col("__p"),
+        element_at(col("__c"), col("__p._1") + 1).as("__e"))
+      .select((col("__r") + 1).as("rank"), col("__g").as(queryCol),
+        col("__e.__id").as(idCol), col("__e.__rel").as("rel"),
+        col("__p._2").as("max_cos_prior"), col("__p._3").as("obj_micro"))
+  }
+
+  /** The greedy MMR loop over one query's candidates, `pool` = id-sorted
+    * (id, vector, norm, rel) structs: per pick, its (position in `pool`,
+    * max_cos_prior, obj_micro). The doubles are Spark's, in Spark's
+    * order: `floor((λ·rel − μ·mc)·10⁶)` as a long (NaN → 0); the
+    * cosine is a left-to-right dot skipping NULL elements (`graft_dot`)
+    * over `n·cn`, NULL when that product is 0; the running max is
+    * `greatest`'s (NaN above every double, an equal value keeps the
+    * old one). The argmax takes the first position among equal
+    * objectives, which is the smaller id. A pick removes every row
+    * with its id — as SQL's `=!=` does, a NULL on either side removes
+    * the row too.
+    */
+  private def mmrGreedy(
+      pool: Seq[Row], k: Int, lambdaMilli: Int): Seq[(Int, Double, Long)] = {
+    val lam = lambdaMilli / 1000.0
+    val mu = (1000 - lambdaMilli) / 1000.0
+    val ids = pool.map(_.get(0)).toArray
+    val vs = pool.map(_.getSeq[java.lang.Double](1).toArray).toArray
+    val ns = pool.map(_.getDouble(2)).toArray
+    val rels = pool.map(_.getDouble(3)).toArray
+    val mc = Array.fill(pool.size)(0.0)
+    val live = Array.fill(pool.size)(true)
+    def objMicro(i: Int) = math.floor((lam * rels(i) - mu * mc(i)) * 1e6)
+      .toLong
+    def dot(a: Array[java.lang.Double], b: Array[java.lang.Double]) = {
+      var s = 0.0
+      for (j <- 0 until math.min(a.length, b.length))
+        if (a(j) != null && b(j) != null) s += a(j) * b(j)
+      s
     }
-    out.reduce(_.unionByName(_))
+    val picks = collection.mutable.ArrayBuffer.empty[(Int, Double, Long)]
+    while (picks.size < k && live.contains(true)) {
+      val p = pool.indices.filter(live).maxBy(objMicro)
+      picks += ((p, mc(p), objMicro(p)))
+      for (i <- pool.indices if live(i)) {
+        if (ids(i) == null || ids(p) == null || ids(i) == ids(p))
+          live(i) = false
+        else {
+          val nn = ns(i) * ns(p)
+          if (nn != 0.0) {
+            val c = dot(vs(i), vs(p)) / nn
+            if (c != mc(i) && java.lang.Double.compare(c, mc(i)) > 0)
+              mc(i) = c
+          }
+        }
+      }
+    }
+    picks.toSeq
   }
 
   /** IVF bucket-balance audit — the index-ops report read before an

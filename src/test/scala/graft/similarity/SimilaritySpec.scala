@@ -660,12 +660,15 @@ class SimilaritySpec extends SparkSpec {
       "rounded csim go to the smaller id, NULL csims (a zero-norm " +
       "query, a NULL centroid vector) rank last, nprobe > nlist probes " +
       "all — in ivfTopK, hardNegatives and ivfPqTopK") {
+    // a NaN csim (centroid 6 has a NaN component) is NULL too: it ranks
+    // last in the probe, and the index assignment never chooses it
     val cs = StructType(Seq(StructField("centroid_id", IntegerType),
       StructField("centroid_vec", ArrayType(DoubleType))))
     def at(a: Double) = Seq(math.cos(a), math.sin(a))
     // 3 and 7 round to the same csim against (1, 0), 7 is nearer raw
     val cents = df(cs, Seq(5 -> at(0.1), 7 -> at(0.3), 3 -> at(-0.30001),
-        1 -> at(1.0), 9 -> at(2.0), 2 -> at(math.Pi), 4 -> null)
+        1 -> at(1.0), 9 -> at(2.0), 2 -> at(math.Pi), 4 -> null,
+        6 -> Seq(Double.NaN, 0.0))
       .map { case (i, v) => Row(i, v) })
     val qs = StructType(Seq(StructField("vec_id", IntegerType),
       StructField("embedding", ArrayType(DoubleType)),
@@ -674,8 +677,10 @@ class SimilaritySpec extends SparkSpec {
       Row(101, Seq(0.0, 0.0), "q"), Row(102, Seq(0.0, 1.0), "q"),
       Row(103, Seq(-1.0, 0.2), "q")))
     // one marker row per centroid, at the centroid itself; the NULL
-    // centroid 4 keeps an empty bucket
-    val markers = df(qs, cents.collect().toSeq.filter(!_.isNullAt(1))
+    // centroid 4 and the NaN centroid 6 keep empty buckets, and no
+    // marker may be assigned to them
+    val markers = df(qs, cents.collect().toSeq
+      .filter(r => !r.isNullAt(1) && !r.getSeq[Double](1).exists(_.isNaN))
       .map(r => Row(1000 + r.getInt(0), r.getSeq[Double](1), "c")))
     val index = Similarity.annIndexRows(markers, "vec_id", "embedding",
       cents)
@@ -695,8 +700,9 @@ class SimilaritySpec extends SparkSpec {
         .orderBy(col("csim").desc, col("centroid_id").asc)
       queries.select(col("vec_id").as("query_id"), col("embedding"))
         .crossJoin(cents)
-        .withColumn("csim", round(Similarity.cosine(col("embedding"),
-          col("centroid_vec")), 4))
+        .withColumn("csim", nanvl(round(Similarity.cosine(
+          col("embedding"), col("centroid_vec")), 4),
+          lit(null).cast("double")))
         .withColumn("r", row_number().over(w))
         .where(col("r") <= nprobe)
         .select("query_id", "centroid_id").collect()
@@ -708,9 +714,13 @@ class SimilaritySpec extends SparkSpec {
 
     assert(windowProbe(2).filter(_._1 == 100) == Set(100 -> 5, 100 -> 3))
     assert(windowProbe(2).filter(_._1 == 101) == Set(101 -> 1, 101 -> 2))
+    // the NaN centroid 6 ranks after every number, with the NULL 4
+    assert(!windowProbe(7).exists(p => p._1 != 101 && p._2 == 6))
     for (nprobe <- Seq(1, 2, 3, 10)) {
-      assert(windowProbe(nprobe).size == 4 * math.min(nprobe, 7))
-      val want = windowProbe(nprobe).filter(_._2 != 4)
+      assert(windowProbe(nprobe).size == 4 * math.min(nprobe, 8))
+      // nprobe 1: every query's first probe holds a marker, so an
+      // empty NULL or NaN bucket ranked first would lose its results
+      val want = windowProbe(nprobe).filter(p => p._2 != 4 && p._2 != 6)
       assert(probed(Similarity.ivfTopK(queries, index, cents, "vec_id",
         "embedding", k = 100, nprobe = nprobe), "neighbor_id") == want,
         s"ivfTopK, nprobe $nprobe")
