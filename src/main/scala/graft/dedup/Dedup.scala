@@ -1094,8 +1094,11 @@ object Dedup {
   /** Build the standing LSH index for incremental NEAR-dup dedup:
     * the corpus's banded signature table (id, band, sig), computed
     * once and reused by every [[nearDupMatches]] batch — the
-    * build/search lifecycle split ([[graft.similarity.Similarity
-    * .buildIvfIndex]], [[buildFingerprintBloom]]). Persist or write it
+    * build/search lifecycle split of the IVF index
+    * ([[graft.similarity.Similarity.buildIvfIndex]] /
+    * [[graft.similarity.Similarity.ivfTopK]], one pair for every
+    * [[graft.similarity.IvfCodec]]) and of [[buildFingerprintBloom]].
+    * Persist or write it
     * to a table; an append-only corpus extends it by unioning the new
     * documents' bands (same md5 family — band hashes never change).
     */

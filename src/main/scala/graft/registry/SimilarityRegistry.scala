@@ -4,7 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.Fx
 import graft.multimodal.Multimodal
 import graft.operators.Analytics
-import graft.similarity.Similarity
+import graft.similarity.{IvfCodec, Similarity}
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1723,8 +1723,8 @@ private[graft] object SimilarityRegistry {
       .orderBy("query_id", "rank")
   }
 
-  /** IVF-PQ ANN ([[Similarity.ivfPqAssignCodes]] /
-    * [[Similarity.ivfPqTopK]]): q112's PQ codes behind q29's coarse
+  /** IVF-PQ ANN ([[Similarity.annIndexRows]] / [[Similarity.ivfTopK]]
+    * with [[IvfCodec.Pq]]): q112's PQ codes behind q29's coarse
     * routing — each query probes its 3 nearest of 16 hash-init
     * centroids and ADC-scores ONLY those buckets' codes, so the
     * scored-row count is Σ(probed bucket sizes), ~nprobe/nlist of
@@ -1738,17 +1738,19 @@ private[graft] object SimilarityRegistry {
     val books = Similarity.pqTrainCodebooks(e, "vec_id", "embedding",
       m = 4, k = 16, iters = 2, exactMedian = true)
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
-    val index = Similarity.ivfPqAssignCodes(
-      e, "vec_id", "embedding", cents, books)
-    Similarity.ivfPqTopK(e.where(col("vec_id") < 10), index, books,
-        cents, "vec_id", "embedding", k = 10, nprobe = 3)
+    val codec = IvfCodec.Pq(books)
+    val index = Similarity.annIndexRows(
+      e, "vec_id", "embedding", cents, codec)
+    Similarity.ivfTopK(e.where(col("vec_id") < 10), index, cents,
+        "vec_id", "embedding", k = 10, nprobe = 3, codec = codec)
       .select(col("query_id"), col("neighbor_id"), col("sim"),
         col("rank").cast("int").as("rank"))
       .orderBy("query_id", "rank")
   }
 
-  /** RESIDUAL IVF-PQ ANN ([[Similarity.ivfRpqTrainCodebooks]] /
-    * [[Similarity.ivfRpqAssignCodes]] / [[Similarity.ivfRpqTopK]]):
+  /** RESIDUAL IVF-PQ ANN ([[Similarity.ivfRpqTrainCodebooks]], then
+    * [[Similarity.annIndexRows]] / [[Similarity.ivfTopK]] with
+    * [[IvfCodec.ResidualPq]]):
     * q113's coarse routing, but the PQ codebooks train on and encode
     * the residual x − c against each vector's assigned centroid — the
     * published IVF-ADC construction that spends the code budget on
@@ -1765,10 +1767,11 @@ private[graft] object SimilarityRegistry {
     // default is the bounded percentile_approx re-center)
     val books = Similarity.ivfRpqTrainCodebooks(e, "vec_id", "embedding",
       cents, m = 4, k = 16, iters = 2, exactMedian = true)
-    val index = Similarity.ivfRpqAssignCodes(
-      e, "vec_id", "embedding", cents, books)
-    Similarity.ivfRpqTopK(e.where(col("vec_id") < 10), index, books,
-        cents, "vec_id", "embedding", k = 10, nprobe = 3)
+    val codec = IvfCodec.ResidualPq(books)
+    val index = Similarity.annIndexRows(
+      e, "vec_id", "embedding", cents, codec)
+    Similarity.ivfTopK(e.where(col("vec_id") < 10), index, cents,
+        "vec_id", "embedding", k = 10, nprobe = 3, codec = codec)
       .select(col("query_id"), col("neighbor_id"), col("sim"),
         col("rank").cast("int").as("rank"))
       .orderBy("query_id", "rank")
@@ -1903,14 +1906,14 @@ private[graft] object SimilarityRegistry {
     * maintenance scaladocs describe, in one query: codebooks train on
     * the INITIAL corpus (vec_id % 4 ≠ 0) and persist to parquet; the
     * IVF-PQ search index builds as a bucketed table
-    * ([[Similarity.pqBuildIvfIndex]]) and the batch (vec_id % 4 = 0)
-    * lands through [[Similarity.ivfPqIndexAppend]] — codes frozen on
-    * the initial-corpus codebooks, exactly the daily-append shape; a
-    * vector-carrying twin ([[Similarity.buildIvfIndex]] +
-    * [[Similarity.ivfIndexAppend]]) feeds [[Similarity.ivfDriftReport]]
+    * ([[Similarity.buildIvfIndex]] with [[IvfCodec.Pq]]) and the batch
+    * (vec_id % 4 = 0) lands through [[Similarity.ivfIndexAppend]] —
+    * codes frozen on the initial-corpus codebooks, exactly the
+    * daily-append shape; a vector-carrying twin (the same two calls
+    * with [[IvfCodec.Vectors]]) feeds [[Similarity.ivfDriftReport]]
     * (a code-only index cannot drift-report). The sampled audit
     * (10 % [[graft.sampling.Sampling.hashFraction]], q138's form)
-    * searches the appended table via [[Similarity.ivfPqTopK]] against
+    * searches the appended table via [[Similarity.ivfTopK]] against
     * the brute-force exact leg, and each sampled query's recall rolls
     * up to its assigned bucket. Output, one row per coarse bucket:
     * (centroid_id, n, mean_sim, recenter_advised, n_audit,
@@ -1993,10 +1996,11 @@ private[graft] object SimilarityRegistry {
     // runs leaking one temp dir per call
     books.write.mode("overwrite").saveAsTable(booksT)
     val booksP = s.table(booksT)
-    Similarity.pqBuildIvfIndex(initial, "vec_id", "embedding", cents,
-      booksP, pqT, numBuckets = 4)
-    Similarity.ivfPqIndexAppend(batch, "vec_id", "embedding", cents,
-      booksP, pqT, numBuckets = 4)
+    val codec = IvfCodec.Pq(booksP)
+    Similarity.buildIvfIndex(initial, "vec_id", "embedding", cents,
+      pqT, numBuckets = 4, codec = codec)
+    Similarity.ivfIndexAppend(batch, "vec_id", "embedding", cents,
+      pqT, numBuckets = 4, codec = codec)
     Similarity.buildIvfIndex(initial, "vec_id", "embedding", cents,
       vecT, numBuckets = 4)
     Similarity.ivfIndexAppend(batch, "vec_id", "embedding", cents,
@@ -2005,8 +2009,8 @@ private[graft] object SimilarityRegistry {
       "embedding", cents)
     val q = e.where(graft.sampling.Sampling
       .hashFraction(col("vec_id"), "audit") < 0.10)
-    val approx = Similarity.ivfPqTopK(q, s.table(pqT),
-      booksP, cents, "vec_id", "embedding", k = 10, nprobe = 3)
+    val approx = Similarity.ivfTopK(q, s.table(pqT), cents,
+      "vec_id", "embedding", k = 10, nprobe = 3, codec = codec)
     val exact = Similarity.bruteForceTopKAgg(
       q, e, "vec_id", "embedding", k = 10)
     val audit = Similarity.recallAudit(approx, exact)
@@ -2251,7 +2255,7 @@ private[graft] object SimilarityRegistry {
     * already-verified operator: chunk
     * ([[TextAnalysis.chunkByTokens]], q61) → feature-hash embed
     * ([[TextAnalysis.featureHashEmbed]]) → IVF-PQ dense index + probe
-    * ([[Similarity.pqTrainCodebooks]]/[[Similarity.ivfPqTopK]], q113)
+    * ([[Similarity.pqTrainCodebooks]]/[[Similarity.ivfTopK]], q113)
     * and BM25 sparse search over the SAME chunks
     * ([[graft.text.TfIdf.bm25Search]], q171) → reciprocal-rank fusion
     * ([[Similarity.rrfFuse]], q90) → per-query MMR diversity rerank
@@ -2287,12 +2291,13 @@ private[graft] object SimilarityRegistry {
     val cents = Similarity.hashKCentroids(cvecs, "chunk_id", "v", 16)
     val books = Similarity.pqTrainCodebooks(cvecs, "chunk_id", "v",
       m = 4, k = 16, iters = 2, exactMedian = true)
-    val index = Similarity.ivfPqAssignCodes(
-      cvecs, "chunk_id", "v", cents, books)
+    val codec = IvfCodec.Pq(books)
+    val index = Similarity.annIndexRows(
+      cvecs, "chunk_id", "v", cents, codec)
     val qvecs = queries.select(col("qid").as("chunk_id"),
       TextAnalysis.featureHashEmbed(col("text"), dim).as("v"))
-    val dense = Similarity.ivfPqTopK(qvecs, index, books, cents,
-        "chunk_id", "v", k = 10, nprobe = 3)
+    val dense = Similarity.ivfTopK(qvecs, index, cents,
+        "chunk_id", "v", k = 10, nprobe = 3, codec = codec)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
     val sparse = graft.text.TfIdf.bm25Search(
         chunks, "chunk_id", "chunk_text", queries, "qid", "text",

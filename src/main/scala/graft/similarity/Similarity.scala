@@ -1,8 +1,34 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+/** What an IVF index row stores next to its `centroid_id`: the raw
+  * vector, its PQ codes, or the PQ codes of its residual against the
+  * assigned centroid. One codec drives the index's assignment
+  * ([[Similarity.annIndexRows]]), its writer
+  * ([[Similarity.buildIvfIndex]] / [[Similarity.ivfIndexAppend]]) and
+  * its search ([[Similarity.ivfTopK]]).
+  */
+sealed trait IvfCodec
+
+object IvfCodec {
+
+  /** Rows `(id, vector, __vn, centroid_id)`, scored by exact cosine. */
+  case object Vectors extends IvfCodec
+
+  /** Rows `(centroid_id, id, codes)` over [[Similarity.pqTrainCodebooks]]
+    * codebooks, scored by asymmetric distance (ADC).
+    */
+  final case class Pq(codebooks: DataFrame) extends IvfCodec
+
+  /** Rows `(centroid_id, id, codes)` where the codes encode x − c, over
+    * [[Similarity.ivfRpqTrainCodebooks]] codebooks (the published
+    * IVF-ADC form); scores cosine(q, c + r̂) from lookup tables.
+    */
+  final case class ResidualPq(codebooks: DataFrame) extends IvfCodec
+}
 
 /** Similarity search over embedding columns (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and an IVF
@@ -20,9 +46,10 @@ import org.apache.spark.sql.functions._
   *   - Brute-force broadcasts the (small) query side; the corpus — the
   *     100 TB side — never moves.
   *   - The IVF variant cuts the scanned corpus to ~nprobe/nlist of the
-  *     data: centroid assignment is a broadcast join; a search probes
-  *     each query row against the centroid literal and streams the
-  *     index into a broadcast join with the probed queries.
+  *     data: centroid assignment and PQ encoding are projections of
+  *     each row against the centroid and codebook literals; a search
+  *     probes each query row the same way and streams the index into
+  *     a broadcast join with the probed queries.
   *   - All rankings use rounded similarity + id tie-breaks, so results
   *     are reproducible across engines, partitionings, and runs.
   */
@@ -94,44 +121,64 @@ object Similarity {
   }
 
   /** The centroid table on the driver: (centroid_id, centroid_vec as
-    * array<double>, its norm, `extra`…), nlist rows — sized by the
-    * model, the rows a broadcast would ship; a necessary driver step
-    * like the k-means centroids (a local relation collects with no job).
+    * array<double>, its norm), nlist rows — sized by the model, the
+    * rows a broadcast would ship; a necessary driver step like the
+    * k-means centroids (a local relation collects with no job).
     */
-  private def centroidRows(cents: DataFrame, extra: Column*): Array[Row] =
-    cents.select(Seq(col("centroid_id"),
+  private def centroidRows(cents: DataFrame): Array[Row] =
+    cents.select(col("centroid_id"),
       col("centroid_vec").cast("array<double>"),
-      norm(col("centroid_vec"))) ++ extra: _*).collect()
+      norm(col("centroid_vec"))).collect()
 
-  /** The coarse probe of every IVF search, a projection of each query
-    * row: its rounded cosine to every [[centroidRows]] centroid as
-    * `(isnull, −csim, id)` keys, sorted (`csim DESC NULLS LAST,
-    * centroid_id ASC`, a NaN csim is NULL as in [[assignWithNorm]]),
-    * cut to `nprobe` and exploded — no cross join,
-    * no window, no exchange. One row per (query, probed centroid):
-    * (query_id, `extra`, __qv, __qn, centroid_id, __ci = the centroid's
-    * position in `cents`); `extra` is computed once per query.
+  /** The [[centroidRows]] vectors as one literal, indexed by `__ci`. */
+  private def centroidVecs(cents: Array[Row]): Column =
+    typedLit(cents.map(_.getSeq[Double](1)).toSeq)
+
+  /** Nearest centroids as a projection of each row — the one
+    * nearest-centroid ranking of this object: the rounded cosine of
+    * vector `v` (norm `vn`) to every [[centroidRows]] centroid as
+    * `(isnull, −csim, id, ci)` keys, sorted (`csim DESC NULLS LAST,
+    * centroid_id ASC`; a NaN csim is NULL, see [[centroidSim]]), cut to
+    * `nprobe` and exploded as `__p` — no cross join, no window, no
+    * exchange. One row per (input row, probed centroid): `__p.id` is
+    * the centroid id and `__p.ci` its position in `cents`.
+    */
+  private def probe(df: DataFrame, v: Column, vn: Column,
+      cents: Array[Row], nprobe: Int, roundTo: Int): DataFrame = {
+    val ids = array(cents.map(r => lit(r.get(0))).toSeq: _*)
+    val norms = typedLit(cents.map(_.getAs[java.lang.Double](2)).toSeq)
+    val keys = transform(centroidVecs(cents), (cv, i) => {
+      val csim = centroidSim(v, cv, vn, norms(i), roundTo)
+      struct(isnull(csim).as("n"), (-csim).as("s"), ids(i).as("id"),
+        i.as("ci"))
+    })
+    df.select(col("*"), explode(slice(sort_array(keys), 1, nprobe))
+      .as("__p"))
+  }
+
+  /** The coarse probe of every IVF search, [[probe]] over the query
+    * rows: one row per (query, probed centroid), (query_id, `extra`,
+    * __qv, __qn, centroid_id, __ci); `extra` is computed once per query.
     */
   private def coarseProbe(
       queries: DataFrame, cents: Array[Row], idCol: String, vecCol: String,
-      nprobe: Int, roundTo: Int, extra: Seq[Column] = Nil): DataFrame = {
-    val ids = array(cents.map(r => lit(r.get(0))).toSeq: _*)
-    val norms = typedLit(cents.map(_.getAs[java.lang.Double](2)).toSeq)
-    val keys = transform(typedLit(cents.map(_.getSeq[Double](1)).toSeq),
-      (cv, i) => {
-        val csim = centroidSim(col("__qv"), cv, col("__qn"), norms(i),
-          roundTo)
-        struct(isnull(csim).as("n"), (-csim).as("s"), ids(i).as("id"),
-          i.as("ci"))
-      })
-    queries.select(col(idCol).as("query_id") +: extra :+
-        col(vecCol).as("__qv") :+ norm(col(vecCol)).as("__qn"): _*)
-      .select(col("*"), explode(slice(sort_array(keys), 1, nprobe))
-        .as("__p"))
+      nprobe: Int, roundTo: Int, extra: Seq[Column] = Nil): DataFrame =
+    probe(queries.select(col(idCol).as("query_id") +: extra :+
+          col(vecCol).as("__qv") :+ norm(col(vecCol)).as("__qn"): _*),
+        col("__qv"), col("__qn"), cents, nprobe, roundTo)
       .select(col("*"), col("__p.id").as("centroid_id"),
         col("__p.ci").as("__ci"))
       .drop("__p")
-  }
+
+  /** `corpus`'s `carry` columns (which hold `vecCol`) and its norm
+    * `__vn`, [[probe]]d against `cents` — the assignment every index
+    * and blocking pass shares.
+    */
+  private def nearestCentroids(corpus: DataFrame, carry: Seq[Column],
+      vecCol: String, cents: Array[Row], nprobe: Int,
+      roundTo: Int): DataFrame =
+    probe(corpus.select(carry :+ norm(col(vecCol)).as("__vn"): _*),
+      col(vecCol), col("__vn"), cents, nprobe, roundTo)
 
   /** ANN hard-negative mining for contrastive training: per query
     * vector, the k most-similar corpus vectors with a DIFFERENT
@@ -244,7 +291,7 @@ object Similarity {
     * k-means centroids without touching the search path).
     *
     * Scale note: nlist = n/stride GROWS with the corpus, so the
-    * broadcast centroid table and the O(n·nlist) assignment grow with
+    * centroid literal and the O(n·nlist) assignment grow with
     * it — [[hashKCentroids]] is the fixed-size init to prefer when the
     * corpus is unbounded.
     */
@@ -257,7 +304,7 @@ object Similarity {
   /** FIXED-k deterministic centroid init: the k vectors whose
     * md5(id) ranks lowest (id tie-break) — a reproducible
     * pseudo-random sample whose size is INDEPENDENT of corpus size,
-    * so the broadcast centroid table stays k rows and every
+    * so the centroid literal stays k rows and every
     * assignment pass costs O(n·k) at any scale. Plans as
     * TakeOrderedAndProject: each partition keeps its local top-k, the
     * driver merges k·partitions candidate rows — no global sort, no
@@ -284,9 +331,9 @@ object Similarity {
   def sqrtNlist(corpusSize: Long, c: Double = 1.0): Int =
     math.max(1, math.round(c * math.sqrt(corpusSize.toDouble)).toInt)
 
-  /** Assign each corpus vector to its nearest centroid (broadcast join
-    * against the small centroid set; ranking rounded for cross-engine
-    * determinism).
+  /** Assign each corpus vector to its nearest centroid ([[probe]] at
+    * nprobe 1 against the small centroid set; ranking rounded for
+    * cross-engine determinism). One output row per input row.
     */
   def assignToCentroids(
       corpus: DataFrame, centroids: DataFrame,
@@ -296,29 +343,15 @@ object Similarity {
 
   /** [[assignToCentroids]] keeping the per-vector norm as `__vn` so
     * downstream stages don't recompute it (the norms-once invariant).
-    * Window ranking on purpose: groups are centroid-count-sized, so
-    * the per-partition sort is bounded and stays codegen'd — measured
-    * faster here than agg forms that drag the vector through
-    * aggregation state.
     */
   private def assignWithNorm(
       corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, roundTo: Int,
       extraCols: Seq[String] = Nil): DataFrame = {
-    val cents = broadcast(centroids.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
     val carry = (Seq(idCol, vecCol) ++ extraCols).map(col)
-    val scored = corpus
-      .select(carry :+ norm(col(vecCol)).as("__vn"): _*)
-      .crossJoin(cents)
-      .select(carry ++ Seq(col("__vn"), col("centroid_id"),
-        centroidSim(col(vecCol), col("centroid_vec"), col("__vn"),
-          col("__cn"), roundTo).as("csim")): _*)
-    val w = Window.partitionBy(idCol)
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    scored.withColumn("__r", row_number().over(w))
-      .where(col("__r") === 1)
-      .select(carry ++ Seq(col("__vn"), col("centroid_id")): _*)
+    nearestCentroids(corpus, carry, vecCol, centroidRows(centroids), 1,
+        roundTo)
+      .select(carry ++ Seq(col("__vn"), col("__p.id").as("centroid_id")): _*)
   }
 
   /** Deterministic centroid refinement — k-MEDIANS, not k-means, on
@@ -327,14 +360,14 @@ object Similarity {
     * summation-order dependence and reproduces bit-for-bit across
     * engines, partitionings, and runs. Init = [[hashKCentroids]] — a
     * FIXED k, so nlist does not grow with the corpus; each iteration
-    * assigns every vector to its nearest centroid (broadcast,
+    * assigns every vector to its nearest centroid ([[probe]],
     * rounded-cosine ranking) and re-centers each bucket at its
     * per-dimension median, rounded to 6 decimals to pin the
     * cross-engine value.
     *
-    * Scale: per iteration, one broadcast assignment pass (O(n·k) dot
-    * products against a k-row broadcast — constant as the corpus
-    * grows) + one aggregation of (centroid, dim) cells — the explode
+    * Scale: per iteration, one assignment projection (O(n·k) dot
+    * products against a k-row centroid literal — constant as the
+    * corpus grows) + one aggregation of (centroid, dim) cells — the explode
     * multiplies rows by the embedding dim, but the aggregate is
     * partial+final (percentile buffers per (centroid, dim) group,
     * bounded by bucket size).
@@ -498,105 +531,113 @@ object Similarity {
   }
 
   /** IVF top-k search over an index frame: each query probes its
-    * `nprobe` nearest centroids ([[coarseProbe]]) and brute-forces only
-    * the index rows in those buckets, ranked by [[rankTopK]].
-    * Approximate (a true neighbor assigned to an unprobed bucket is
-    * missed) — that's the documented recall/cost trade; nprobe = nlist
-    * degrades to exactly [[bruteForceTopKAgg]].
+    * `nprobe` nearest centroids ([[coarseProbe]]) and scores only the
+    * index rows in those buckets ([[ivfScoredCandidates]]), ranked by
+    * [[rankTopK]]. Approximate (a true neighbor assigned to an
+    * unprobed bucket is missed) — that's the documented recall/cost
+    * trade; nprobe = nlist degrades to exactly [[bruteForceTopKAgg]]
+    * (`Vectors`) or [[pqTopK]] (`Pq`) over the index.
     *
-    * `index` rows carry (idCol, vecCol, __vn, centroid_id) —
-    * [[buildIvfIndex]]'s layout: pass `spark.table(name)` over a built
-    * index (no assignment work at query time), [[annIndexRows]] over a
-    * corpus and `cents` for a one-off search, or the streaming sink's
-    * store ([[graft.streaming.EventStreams.annIndexMaintenanceSink]]).
-    * The centroid "training" is swappable: [[hashKCentroids]] (fixed
-    * nlist, so the broadcast centroid table and the O(n·nlist)
-    * assignment cost are independent of corpus size) or
-    * [[kMediansCentroids]].
+    * `index` rows are [[annIndexRows]]' for the same `codec`: pass
+    * `spark.table(name)` over a [[buildIvfIndex]] table (no assignment
+    * or encoding work at query time), [[annIndexRows]] over a corpus
+    * and `cents` for a one-off search, or the streaming sink's store
+    * ([[graft.streaming.EventStreams.annIndexMaintenanceSink]]). The
+    * centroid "training" is swappable: [[hashKCentroids]] (fixed
+    * nlist, so the centroid literal and the O(n·nlist) assignment cost
+    * are independent of corpus size) or [[kMediansCentroids]].
     */
   def ivfTopK(
       queries: DataFrame, index: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
-      k: Int, nprobe: Int, roundTo: Int = 4): DataFrame = {
-    val probed = coarseProbe(queries, centroidRows(cents), idCol, vecCol,
-        nprobe, roundTo)
-      .select("query_id", "__qv", "__qn", "centroid_id")
-    // search only the probed buckets; norms reused from assignment
-    val bucketed = index.select(col("centroid_id"),
-      col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-      col("__vn").as("__cn"))
-    val sims = broadcast(probed).join(bucketed, Seq("centroid_id"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosFromNorms(col("__qv"), col("__cv"),
-          col("__qn"), col("__cn")), roundTo).as("sim"))
-    rankTopK(sims, k, index.schema(idCol).dataType)
-  }
+      k: Int, nprobe: Int, roundTo: Int = 4,
+      codec: IvfCodec = IvfCodec.Vectors): DataFrame =
+    rankTopK(ivfScoredCandidates(queries, index, cents, idCol, vecCol,
+      nprobe, roundTo, codec), k, index.schema(idCol).dataType)
 
-  /** Materialize an IVF index: the corpus with per-vector norms and
-    * centroid assignments, written as a catalog table BUCKETED on
-    * `centroid_id`. Build once, search many — repeated queries skip
-    * the centroid-assignment pass (the per-query-batch crossJoin over
-    * the whole corpus), and the bucket layout co-locates each
-    * centroid's vectors so a probe reads only its buckets' files.
-    * Returns the indexed row count.
+  /** Materialize an IVF index: [[annIndexRows]] written as a catalog
+    * table BUCKETED on `centroid_id`. Build once, search many —
+    * repeated queries skip assignment and encoding, and the bucket
+    * layout co-locates each centroid's rows so a probe reads only its
+    * buckets' files. Returns the indexed row count.
     */
   def buildIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, tableName: String,
-      numBuckets: Int = 16, roundTo: Int = 4): Long = {
-    val assigned = assignWithNorm(corpus, cents, idCol, vecCol, roundTo)
-    assigned.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "centroid_id")
-      .saveAsTable(tableName)
-    corpus.sparkSession.table(tableName).count()
-  }
+      numBuckets: Int = 16, roundTo: Int = 4,
+      codec: IvfCodec = IvfCodec.Vectors): Long =
+    writeIvfIndex(annIndexRows(corpus, idCol, vecCol, cents, codec,
+      roundTo), "overwrite", tableName, numBuckets)
 
-  /** One batch's index rows in the standing store's layout — the
-    * shared assignment step of [[buildIvfIndex]]/[[ivfIndexAppend]]
-    * (vector-carrying: `(idCol, vecCol, __vn, centroid_id)`) or, with
-    * `codebooks`, of [[pqBuildIvfIndex]]/[[ivfPqIndexAppend]]
-    * (code-carrying: `(centroid_id, idCol, codes)`). Exposed for the
-    * streaming maintenance sink, whose store is a batch-partitioned
-    * parquet directory rather than a catalog table: at fixed
-    * centroids (and codebooks) these rows are a pure function of the
-    * batch, which is what makes the sink's overwrite-by-batch replay
-    * idempotent.
+  /** One batch's index rows in the standing store's layout, for the
+    * `codec`: `(idCol, vecCol, __vn, centroid_id)` for `Vectors`,
+    * `(centroid_id, idCol, codes)` for `Pq` and `ResidualPq`. Each row
+    * is a projection of its own input row against the centroid and
+    * codebook literals ([[probe]] at nprobe 1, then [[pqCodes]]) — no
+    * join, window or aggregate, one index row per input row. At fixed
+    * centroids and codebooks these rows are a pure function of the
+    * batch: an append equals a rebuild over the union, and the
+    * streaming sink's overwrite-by-batch replay is idempotent.
     */
   def annIndexRows(
       batch: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: Option[DataFrame] = None,
-      roundTo: Int = 4): DataFrame = codebooks match {
-    case Some(cb) =>
-      ivfPqAssignCodes(batch, idCol, vecCol, cents, cb, roundTo)
-    case None =>
-      assignWithNorm(batch, cents, idCol, vecCol, roundTo)
+      cents: DataFrame, codec: IvfCodec = IvfCodec.Vectors,
+      roundTo: Int = 4): DataFrame = {
+    val cr = centroidRows(cents)
+    val near = nearestCentroids(batch, Seq(col(idCol), col(vecCol)),
+      vecCol, cr, 1, roundTo)
+    val cid = col("__p.id").as("centroid_id")
+    val v = col(vecCol).cast("array<double>")
+    codec match {
+      case IvfCodec.Vectors =>
+        near.select(col(idCol), col(vecCol), col("__vn"), cid)
+      case IvfCodec.Pq(cb) =>
+        near.select(cid, col(idCol), pqCodes(v, pqLayout(cb)).as("codes"))
+      case IvfCodec.ResidualPq(cb) =>
+        near.select(cid, col(idCol),
+          pqCodes(residual(v, cr), pqLayout(cb)).as("codes"))
+    }
   }
 
-  /** Incrementally APPEND a batch to a [[buildIvfIndex]] table: the
-    * batch is assigned to the EXISTING centroids (broadcast, same
-    * rounded ranking as the build) and appended in the same bucket
-    * layout — the ANN analogue of the dedup family's band-index
-    * append. `numBuckets` must match the original build (Spark
-    * enforces bucket-spec compatibility on append). At fixed
-    * centroids the appended index is row-identical to a from-scratch
-    * rebuild over the unioned corpus (spec-pinned), so readers —
-    * [[ivfTopK]] — need no special handling. Centroids
-    * drift as batches accumulate; [[ivfDriftReport]] is the
-    * re-center trigger. Returns the appended row count.
+  /** Incrementally APPEND a batch to a [[buildIvfIndex]] table of the
+    * same `codec`: the batch is assigned to the EXISTING centroids
+    * (and encoded with the EXISTING codebooks) and appended in the
+    * same bucket layout — the ANN analogue of the dedup family's
+    * band-index append. `numBuckets` must match the original build
+    * (Spark enforces bucket-spec compatibility on append). The
+    * appended index is row-identical to a from-scratch rebuild over
+    * the unioned corpus (spec-pinned), so readers — [[ivfTopK]] — need
+    * no special handling. Centroids drift as batches accumulate;
+    * [[ivfDriftReport]] over a `Vectors` index is the re-center
+    * trigger. Returns the appended row count.
     */
   def ivfIndexAppend(
       batch: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, tableName: String,
-      numBuckets: Int = 16, roundTo: Int = 4): Long = {
-    val assigned = assignWithNorm(batch, cents, idCol, vecCol, roundTo)
-    assigned.write.mode("append").format("parquet")
+      numBuckets: Int = 16, roundTo: Int = 4,
+      codec: IvfCodec = IvfCodec.Vectors): Long =
+    writeIvfIndex(annIndexRows(batch, idCol, vecCol, cents, codec,
+      roundTo), "append", tableName, numBuckets)
+
+  /** Write index rows as a parquet table bucketed on `centroid_id`.
+    * The rows are hash-partitioned by `centroid_id` into `numBuckets`
+    * first — the partitioning bucketing computes — so each bucket is
+    * one file, and the write job counts its rows through an
+    * [[Observation]] instead of a second pass.
+    */
+  private def writeIvfIndex(rows: DataFrame, mode: String,
+      tableName: String, numBuckets: Int): Long = {
+    val written = Observation()
+    rows.repartition(numBuckets, col("centroid_id"))
+      .observe(written, count(lit(1)).as("n"))
+      .write.mode(mode).format("parquet")
       .bucketBy(numBuckets, "centroid_id")
       .saveAsTable(tableName)
-    assigned.count()
+    written.get("n").asInstanceOf[Long]
   }
 
-  /** Per-centroid drift report over an IVF index table: each
+  /** Per-centroid drift report over a `Vectors` IVF index table
+    * ([[buildIvfIndex]]): each
     * centroid's stored vector vs the MEAN of its currently-assigned
     * members ([[groupCentroids]] — one distributed pass over the
     * index, narrow (centroid, dim) cells). `mean_sim` is their
@@ -604,8 +645,9 @@ object Similarity {
     * `simFloor` — the signal that appended batches
     * ([[ivfIndexAppend]]) have shifted a bucket's population far
     * enough from its routing vector that re-training centroids (and
-    * re-building the index) is worth the pass. The report is
-    * nlist-row-sized regardless of corpus scale.
+    * re-building the index) is worth the pass. A code-carrying index
+    * holds no vectors to average: report on a `Vectors` twin. The
+    * report is nlist-row-sized regardless of corpus scale.
     */
   def ivfDriftReport(
       spark: org.apache.spark.sql.SparkSession,
@@ -655,32 +697,16 @@ object Similarity {
   def multiAssignToCentroids(
       corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String,
-      nprobe: Int, roundTo: Int = 4): DataFrame = {
-    val cents = broadcast(centroids.select(col("centroid_id"),
-      col("centroid_vec"), norm(col("centroid_vec")).as("__cn")))
-    val scored = corpus
-      .select(col(idCol), col(vecCol), norm(col(vecCol)).as("__vn"))
-      .crossJoin(cents)
-      .select(col(idCol), col("centroid_id"),
-        centroidSim(col(vecCol), col("centroid_vec"), col("__vn"),
-          col("__cn"), roundTo).as("csim"))
-    // window ranking: the vector × centroid score table partitions by
-    // vector (tiny groups = centroid count), so the sort is bounded and
-    // stays codegen'd — measured faster here than the heap-aggregate
-    // udaf, whose per-row encoding dominates at this group size. The
-    // TopKByScore form is the swap-in when groups are huge.
-    val w = Window.partitionBy(idCol)
-      .orderBy(col("csim").desc, col("centroid_id").asc)
-    scored.withColumn("__r", row_number().over(w))
-      .where(col("__r") <= nprobe)
-      .select(col(idCol), col("centroid_id"))
-  }
+      nprobe: Int, roundTo: Int = 4): DataFrame =
+    nearestCentroids(corpus, Seq(col(idCol), col(vecCol)), vecCol,
+        centroidRows(centroids), nprobe, roundTo)
+      .select(col(idCol), col("__p.id").as("centroid_id"))
 
   /** Centroid-BLOCKED embedding near-dup pairs — the scale path that
     * replaces the all-pairs scan: candidates are (id_a < id_b) pairs
     * sharing at least one of their `nprobe` nearest centroids, verified
     * with one exact dot product each. Work is Σ(bucket²) over probe
-    * buckets, not n²/2; candidate generation broadcasts only the small
+    * buckets, not n²/2; candidate generation ships only the small
     * FIXED-size centroid set ([[hashKCentroids]] — `nlist` independent
     * of corpus size). Recall < 1.0 is possible for pairs whose probe
     * sets are disjoint — raise `nprobe` (more buckets per vector) or
@@ -757,22 +783,11 @@ object Similarity {
         if (nOver == 0) small
         else {
           val k2 = math.max(2, math.ceil(nOver.toDouble / limit).toInt)
-          val c2 = broadcast(
-            hashKCentroids(big.select(col(idCol), col(vecCol)),
-                idCol, vecCol, k2)
-              .select(col("centroid_id").as("__c2"),
-                col("centroid_vec").as("__cv2"))
-              .withColumn("__cn2", norm(col("__cv2"))))
-          val w = Window.partitionBy(idCol)
-            .orderBy(col("__csim2").desc, col("__c2").asc)
-          val big2 = big.crossJoin(c2)
-            .withColumn("__csim2",
-              centroidSim(col(vecCol), col("__cv2"), col("__vn"),
-                col("__cn2"), roundTo))
-            .withColumn("__r2", row_number().over(w))
-            .where(col("__r2") === 1)
+          val c2 = centroidRows(hashKCentroids(
+            big.select(col(idCol), col(vecCol)), idCol, vecCol, k2))
+          val big2 = probe(big, col(vecCol), col("__vn"), c2, 1, roundTo)
             .select(col(idCol), col(vecCol), col("__vn"),
-              col("centroid_id"), col("__c2").cast("string").as("__blk"))
+              col("centroid_id"), col("__p.id").cast("string").as("__blk"))
           small.select(col(idCol), col(vecCol), col("__vn"),
               col("centroid_id"), col("__blk"))
             .unionByName(big2)
@@ -1062,33 +1077,28 @@ object Similarity {
     * split that makes per-block assignment EXACTLY minimize the
     * vector's total quantization error (‖x − x̂‖² = Σ_b ‖x_b − c_b‖²).
     * Ties break on the lower code, so encoding is deterministic.
-    * Output: (id, codes array<int>, block-ordered). One broadcast
-    * join against the m·k-row codebook table; the corpus never
-    * shuffles wider than (id, block, code).
+    * Output: (id, codes array<int>, block-ordered), one row per input
+    * row — a projection against the codebook literal ([[pqCodes]]),
+    * no join, no shuffle.
     */
   def pqEncode(
       df: DataFrame, idCol: String, vecCol: String,
-      codebooks: DataFrame): DataFrame = {
-    val cb = broadcast(codebooks.select(col("block"), col("code"),
-      col("codeword"), dot(col("codeword"), col("codeword")).as("__cc")))
-    val pq = pqLayout(codebooks)
-    val v = col(vecCol).cast("array<double>")
-    val exploded = df.select(col(idCol),
-      subBlocks(v, pq.m, pq.sub).as(Seq("__blk", "__sub")))
-    // ‖x_b − c‖² = x·x − 2 x·c + c·c; x·x is constant per (row, block)
-    // → argmin needs only c·c − 2 x·c
-    val d2 = col("__cc") - lit(2.0) * dot(col("__sub"), col("codeword"))
-    exploded
-      .join(cb, col("__blk") === col("block"))
-      .groupBy(col(idCol), col("__blk"))
-      .agg(min_by(col("code"), struct(d2.as("d"), col("code")))
-        .as("__code"))
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(col("__blk"), col("__code"))))
-        .as("__bc"))
-      .select(col(idCol),
-        transform(col("__bc"), p => p.getField("__code")).as("codes"))
-  }
+      codebooks: DataFrame): DataFrame =
+    df.select(col(idCol), pqCodes(col(vecCol).cast("array<double>"),
+      pqLayout(codebooks)).as("codes"))
+
+  /** The PQ codes of vector `v` (array<double>): per block b, the code
+    * c minimizing (‖cw‖² − 2·v_b·cw, c) — ‖v_b − cw‖² less the per-block
+    * constant ‖v_b‖². Struct order, as in a `min_by` over that pair:
+    * ties go to the smaller code, a NULL distance (a NULL vector)
+    * ranks first and a NaN last.
+    */
+  private def pqCodes(v: Column, pq: PqLayout): Column =
+    transform(typedLit(pq.words), (words, b) =>
+      array_min(transform(words, (cw, c) => struct(
+        (typedLit(pq.cc).getItem(b).getItem(c) - lit(2.0) *
+          dot(slice(v, b * pq.sub + lit(1), lit(pq.sub)), cw)).as("d"),
+        c.as("code")))).getField("code"))
 
   /** PQ reconstruction: codes → concatenated codewords (block order).
     * Mainly for the decomposition-identity spec and error audits.
@@ -1201,118 +1211,50 @@ object Similarity {
   // IVF-PQ (coarse routing over PQ codes)                             //
   // ---------------------------------------------------------------- //
 
-  /** The IVF-PQ index content: every corpus vector's coarse-centroid
-    * assignment next to its PQ codes — (centroid_id, id, codes).
-    * This is the 100 TB index row: m small ints per vector instead of
-    * dim floats, clustered by the routing key. Coarse assignment and
-    * encoding each broadcast only small tables (cents; codebooks);
-    * the corpus shuffles once, as (id, centroid, codes) rows.
-    */
-  def ivfPqAssignCodes(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: DataFrame,
-      roundTo: Int = 4): DataFrame = {
-    val assigned = assignToCentroids(corpus, cents, idCol, vecCol, roundTo)
-      .select(col(idCol), col("centroid_id"))
-    val codes = pqEncode(corpus, idCol, vecCol, codebooks)
-    assigned.join(codes, Seq(idCol))
-      .select(col("centroid_id"), col(idCol), col("codes"))
-  }
-
-  /** Materialize the IVF-PQ index as a catalog table BUCKETED on
-    * `centroid_id` ([[buildIvfIndex]]'s layout over [[ivfPqAssignCodes]]
-    * rows): build once, search many — a probe reads only its buckets'
-    * files, and the rows carry codes, not vectors. Returns the
-    * indexed row count.
-    */
+  /** [[buildIvfIndex]] with the [[IvfCodec.Pq]] codec. */
   def pqBuildIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, codebooks: DataFrame, tableName: String,
-      numBuckets: Int = 16, roundTo: Int = 4): Long = {
-    ivfPqAssignCodes(corpus, idCol, vecCol, cents, codebooks, roundTo)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "centroid_id")
-      .saveAsTable(tableName)
-    corpus.sparkSession.table(tableName).count()
-  }
+      numBuckets: Int = 16, roundTo: Int = 4): Long =
+    buildIvfIndex(corpus, idCol, vecCol, cents, tableName, numBuckets,
+      roundTo, IvfCodec.Pq(codebooks))
 
-  /** Incrementally APPEND a batch to a [[pqBuildIvfIndex]] table:
-    * the batch is assigned to the EXISTING centroids and encoded with
-    * the EXISTING codebooks, then appended in the same bucket layout
-    * — [[ivfIndexAppend]] for the code-carrying index. At fixed
-    * centroids and codebooks the appended index is row-identical to a
-    * from-scratch rebuild over the unioned corpus (spec-pinned).
-    * [[ivfDriftReport]] does not apply here (the index stores codes,
-    * not vectors) — run it on a vector-carrying [[buildIvfIndex]]
-    * twin, or re-train when recall audits slip. Returns the appended
-    * row count.
-    */
-  def ivfPqIndexAppend(
-      batch: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: DataFrame, tableName: String,
-      numBuckets: Int = 16, roundTo: Int = 4): Long = {
-    val rows = ivfPqAssignCodes(batch, idCol, vecCol, cents, codebooks,
-      roundTo)
-    rows.write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "centroid_id")
-      .saveAsTable(tableName)
-    rows.count()
-  }
-
-  /** IVF-PQ top-k — [[pqTopK]]'s ADC scoring with COARSE ROUTING in
-    * front: each query probes its `nprobe` nearest coarse centroids
-    * (same rounded-cosine ranking as [[ivfTopK]]) and ADC-scores ONLY
-    * the codes assigned to those buckets. The scored-row count is
-    * Σ(probed bucket sizes) per query — ~nprobe/nlist of the corpus —
-    * instead of [[pqTopK]]'s corpus × queries. Probe and lookup table
-    * are projections of each query row ([[coarseProbe]],
-    * [[adcTable]]); the index streams into a broadcast join on
-    * `centroid_id` and each candidate is scored by one per-row fold,
-    * so the only shuffle is [[rankTopK]]'s. Per-pair similarity is
-    * IDENTICAL to [[pqTopK]]'s (same table, same block-ordered fold,
-    * spec-pinned); the routing adds the standard IVF recall trade —
-    * a true neighbor encoded into an unprobed bucket is missed, and
-    * `nprobe = nlist` degrades to exactly [[pqTopK]] over the index.
-    *
-    * `index` rows are [[ivfPqAssignCodes]]'s (centroid_id, id, codes);
-    * pass `spark.table(...)` over a [[pqBuildIvfIndex]] table to skip
-    * assignment and encoding at query time entirely.
-    */
+  /** [[ivfTopK]] with the [[IvfCodec.Pq]] codec. */
   def ivfPqTopK(
       queries: DataFrame, index: DataFrame,
       codebooks: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String,
-      k: Int, nprobe: Int, roundTo: Int = 4): DataFrame = {
-    val sims = ivfPqScoredCandidates(
-      queries, index, codebooks, cents, idCol, vecCol, nprobe, roundTo)
-    rankTopK(sims, k, index.schema(idCol).dataType)
-  }
-
-  // -- residual IVF-PQ (the published IVF-ADC form) ----------------- //
+      k: Int, nprobe: Int, roundTo: Int = 4): DataFrame =
+    ivfTopK(queries, index, cents, idCol, vecCol, k, nprobe, roundTo,
+      IvfCodec.Pq(codebooks))
 
   /** Coarse-residual frame: every corpus vector's assigned centroid
     * and its residual x − c (per-dimension double subtraction) — what
-    * residual PQ trains on and encodes. Residual encoding is the
-    * published IVF-ADC construction (the PQ codebook spends its bits
-    * on the LOCAL displacement within a Voronoi cell instead of
-    * absolute position, which is what lifts recall at the same code
-    * budget). Output: (idCol, centroid_id, `__res`).
+    * residual PQ trains on. Residual encoding is the published IVF-ADC
+    * construction (the PQ codebook spends its bits on the LOCAL
+    * displacement within a Voronoi cell instead of absolute position,
+    * which is what lifts recall at the same code budget). Output:
+    * (idCol, centroid_id, `__res`).
     */
-  def ivfResiduals(
+  private[similarity] def ivfResiduals(
       corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, roundTo: Int = 4): DataFrame =
-    assignToCentroids(corpus, cents, idCol, vecCol, roundTo)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .select(col(idCol), col("centroid_id"),
-        zip_with(col(vecCol).cast("array<double>"),
-          col("centroid_vec").cast("array<double>"),
-          (x, c) => x - c).as("__res"))
+      cents: DataFrame, roundTo: Int = 4): DataFrame = {
+    val cr = centroidRows(cents)
+    nearestCentroids(corpus, Seq(col(idCol), col(vecCol)), vecCol, cr, 1,
+        roundTo)
+      .select(col(idCol), col("__p.id").as("centroid_id"),
+        residual(col(vecCol).cast("array<double>"), cr).as("__res"))
+  }
+
+  /** x − c for a [[probe]]d row: `v` less its centroid `__p.ci`. */
+  private def residual(v: Column, cents: Array[Row]): Column =
+    zip_with(v, centroidVecs(cents)(col("__p.ci")), (x, c) => x - c)
 
   /** Train residual-PQ codebooks: [[pqTrainCodebooks]] over the
     * [[ivfResiduals]] frame — same fused one-pass-per-iteration
     * training, same hash init (id-based, so the initializing ids
     * match the raw-vector training's), bounded re-center state by
-    * default.
+    * default. Index and search with [[IvfCodec.ResidualPq]].
     */
   def ivfRpqTrainCodebooks(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -1325,95 +1267,16 @@ object Similarity {
       idCol, "__res", m, k, iters, roundTo, exactMedian,
       approxAccuracy, sampleFraction)
 
-  /** Residual IVF-PQ index content: (centroid_id, id, codes) where
-    * `codes` encode the vector's RESIDUAL against its coarse
-    * centroid. The reconstruction is x̂ = c + concat(codewords);
-    * [[ivfRpqTopK]] scores that reconstruction from codes only.
-    */
-  def ivfRpqAssignCodes(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: DataFrame,
-      roundTo: Int = 4): DataFrame = {
-    val res = ivfResiduals(corpus, idCol, vecCol, cents, roundTo)
-    pqEncode(res, idCol, "__res", codebooks)
-      .join(res.select(col(idCol), col("centroid_id")), Seq(idCol))
-      .select(col("centroid_id"), col(idCol), col("codes"))
-  }
-
-  /** [[pqBuildIvfIndex]] for the RESIDUAL index: materialize
-    * [[ivfRpqAssignCodes]] rows as a catalog table bucketed on
-    * `centroid_id` — build once, search many with [[ivfRpqTopK]].
-    * Returns the indexed row count.
-    */
-  def rpqBuildIvfIndex(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: DataFrame, tableName: String,
-      numBuckets: Int = 16, roundTo: Int = 4): Long = {
-    ivfRpqAssignCodes(corpus, idCol, vecCol, cents, codebooks, roundTo)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, "centroid_id")
-      .saveAsTable(tableName)
-    corpus.sparkSession.table(tableName).count()
-  }
-
-  /** [[ivfPqIndexAppend]] for the RESIDUAL index: assign + encode a
-    * batch against the EXISTING centroids and codebooks, append in the
-    * same bucket layout. At fixed centroids and codebooks the appended
-    * index is row-identical to a from-scratch rebuild over the unioned
-    * corpus (spec-pinned). Returns the appended row count.
-    */
-  def ivfRpqIndexAppend(
-      batch: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: DataFrame, tableName: String,
-      numBuckets: Int = 16, roundTo: Int = 4): Long = {
-    val rows = ivfRpqAssignCodes(batch, idCol, vecCol, cents, codebooks,
-      roundTo)
-    rows.write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "centroid_id")
-      .saveAsTable(tableName)
-    rows.count()
-  }
-
-  /** Residual IVF-PQ top-k: coarse routing as [[ivfPqTopK]], ADC
-    * scoring of cosine(q, c + r̂) decomposed entirely into lookup
-    * tables —
-    *
-    *   dot(q, x̂)  = dot(q, c) + Σ_b dot(q_b, cw_b)
-    *   ‖x̂‖²       = ‖c‖² + 2·Σ_b dot(c_b, cw_b) + Σ_b ‖cw_b‖²
-    *
-    * so the per-pair work is three per-row folds of m lookups: into
-    * the query's table, into the probed CENTROID's table of
-    * dot(c_b, cw) (nlist·m·k values in the centroid literal —
-    * centroid-dependent but corpus-size-independent) and into the
-    * ‖cw‖² table; the streamed index side carries only (centroid, id,
-    * codes). All folds run in block order
-    * (left-assoc), so the oracle can replay the exact float
-    * arithmetic. Equal to cosine against the reconstructed c + r̂ up
-    * to the decomposition's summation order (spec-pinned at 1e-9);
-    * the approximation is all in the residual ENCODING, which is the
-    * published recall-per-bit win over raw-vector PQ (spec-checked
-    * against [[ivfPqTopK]] on clustered data).
-    */
-  def ivfRpqTopK(
-      queries: DataFrame, index: DataFrame,
-      codebooks: DataFrame, cents: DataFrame,
-      idCol: String, vecCol: String,
-      k: Int, nprobe: Int, roundTo: Int = 4): DataFrame = {
-    val sims = ivfRpqScoredCandidates(
-      queries, index, codebooks, cents, idCol, vecCol, nprobe, roundTo)
-    rankTopK(sims, k, index.schema(idCol).dataType)
-  }
-
   /** Per-group recall of an approximate result frame against the
     * exact one — the standing index-health audit the maintenance
-    * operators ([[ivfIndexAppend]]/[[ivfPqIndexAppend]]/
-    * [[ivfDriftReport]]) point at: run it on a deterministic
+    * operators ([[ivfIndexAppend]]/[[ivfDriftReport]]) point at: run
+    * it on a deterministic
     * hash-SAMPLE of queries (the exact leg is a brute-force scan —
     * audit-sized, never the full query load) and re-center/re-train
     * when the aggregate slips. Generic over `keyCols`: with the
     * default (query_id, neighbor_id) it audits any ANN top-k pair
-    * ([[bruteForceTopKAgg]] vs [[ivfTopK]]/[[ivfPqTopK]]/
-    * [[ivfRpqTopK]]/int8); with (id_a, id_b) it audits LSH candidate
+    * ([[bruteForceTopKAgg]] vs [[ivfTopK]] under any [[IvfCodec]], or
+    * int8); with (id_a, id_b) it audits LSH candidate
     * pairs against exact-threshold pairs. Grouping is by
     * `keyCols.head`; rows in `approx` with no exact twin (false
     * positives) don't lower recall — this measures MISSES. Output:
@@ -1437,64 +1300,66 @@ object Similarity {
           col("n_exact"), roundTo).as("recall"))
   }
 
-  /** The routed, residual-ADC-scored candidate rows behind
-    * [[ivfRpqTopK]] — (query_id, neighbor_id, sim), one row per
-    * (query, probed-bucket member). Package-private for the same
-    * nprobe-boundedness specs as [[ivfPqScoredCandidates]].
-    */
-  private[similarity] def ivfRpqScoredCandidates(
-      queries: DataFrame, index: DataFrame,
-      codebooks: DataFrame, cents: DataFrame,
-      idCol: String, vecCol: String,
-      nprobe: Int, roundTo: Int): DataFrame = {
-    val pq = pqLayout(codebooks)
-    // per centroid: ‖c‖² and its own table of dot(c_b, cw)
-    val cv = col("centroid_vec").cast("array<double>")
-    val cr = centroidRows(cents, dot(cv, cv), adcTable(cv, pq))
-    val ci = col("__ci")
-    val qv = col(vecCol).cast("array<double>")
-    val probed = coarseProbe(queries, cr, idCol, vecCol, nprobe, roundTo,
-        extra = Seq(adcTable(qv, pq).as("__lut")))
-      .select(col("query_id"), col("__qn"), col("__lut"),
-        col("centroid_id"), dot(col("__qv"),
-          typedLit(cr.map(_.getSeq[Double](1)).toSeq).getItem(ci))
-          .as("__qc"),
-        typedLit(cr.map(_.getAs[java.lang.Double](3)).toSeq).getItem(ci)
-          .as("__cn2"),
-        typedLit(cr.map(_.getSeq[collection.Seq[Double]](4)).toSeq)
-          .getItem(ci).as("__cx"))
-    index.join(broadcast(probed), Seq("centroid_id"))
-      .where(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round((col("__qc") + adcFold(col("__lut"), pq)) / nullif(
-          col("__qn") * sqrt(col("__cn2") +
-            lit(2.0) * adcFold(col("__cx"), pq) +
-            adcFold(typedLit(pq.cc), pq)),
-          lit(0.0)), roundTo).as("sim"))
-  }
-
-  /** The routed, ADC-scored candidate rows behind [[ivfPqTopK]] —
+  /** The routed, scored candidate rows behind [[ivfTopK]] —
     * (query_id, neighbor_id, sim), one row per (query, probed-bucket
-    * member). Package-private so specs can assert the candidate count
-    * is exactly Σ(probed bucket sizes) — the nprobe boundedness that
+    * member). The probed queries — (queries·nprobe) rows — broadcast
+    * and the index streams into the join on `centroid_id`; each
+    * candidate is scored by a per-row expression:
+    *
+    *   - `Vectors`: the rounded cosine, norms reused from the index;
+    *   - `Pq`: the ADC cosine ([[adcCosine]]) — the query row carries
+    *     its m·k lookup table ([[adcTable]]), the same table and
+    *     block-ordered fold as [[pqTopK]];
+    *   - `ResidualPq`: cosine(q, c + r̂) decomposed into lookups,
+    *
+    *       dot(q, x̂)  = dot(q, c) + Σ_b dot(q_b, cw_b)
+    *       ‖x̂‖²       = ‖c‖² + 2·Σ_b dot(c_b, cw_b) + Σ_b ‖cw_b‖²
+    *
+    *     three block-ordered folds of m lookups: into the query's
+    *     table, into the probed centroid's table of dot(c_b, cw) and
+    *     into the ‖cw‖² table. The centroid terms are computed once
+    *     per probed (query, centroid) row, and equal cosine against
+    *     the reconstructed c + r̂ up to summation order (spec-pinned
+    *     at 1e-9).
+    *
+    * Package-private so specs can assert the candidate count is
+    * exactly Σ(probed bucket sizes) — the nprobe boundedness that
     * distinguishes this from [[pqTopK]]'s corpus × queries scoring.
     */
-  private[similarity] def ivfPqScoredCandidates(
-      queries: DataFrame, index: DataFrame,
-      codebooks: DataFrame, cents: DataFrame,
-      idCol: String, vecCol: String,
-      nprobe: Int, roundTo: Int): DataFrame = {
-    val pq = pqLayout(codebooks)
+  private[similarity] def ivfScoredCandidates(
+      queries: DataFrame, index: DataFrame, cents: DataFrame,
+      idCol: String, vecCol: String, nprobe: Int, roundTo: Int,
+      codec: IvfCodec): DataFrame = {
+    val cr = centroidRows(cents)
     val qv = col(vecCol).cast("array<double>")
-    val probed = coarseProbe(queries, centroidRows(cents), idCol, vecCol,
-        nprobe, roundTo, extra = Seq(adcTable(qv, pq).as("__lut")))
-      .select("query_id", "__qn", "__lut", "centroid_id")
-    // candidates: ONLY the probed buckets' codes — the index side
-    // streams, the (queries·nprobe)-row probe table broadcasts
-    index.join(broadcast(probed), Seq("centroid_id"))
+    def probed(extra: Column*) = coarseProbe(queries, cr, idCol, vecCol,
+      nprobe, roundTo, extra)
+    val (candidates, sim) = codec match {
+      case IvfCodec.Vectors =>
+        (probed().select("query_id", "__qv", "__qn", "centroid_id"),
+          round(cosFromNorms(col("__qv"), col(vecCol), col("__qn"),
+            col("__vn")), roundTo))
+      case IvfCodec.Pq(cb) =>
+        val pq = pqLayout(cb)
+        (probed(adcTable(qv, pq).as("__lut"))
+            .select("query_id", "__qn", "__lut", "centroid_id"),
+          adcCosine(pq, roundTo))
+      case IvfCodec.ResidualPq(cb) =>
+        val pq = pqLayout(cb)
+        val c = centroidVecs(cr)(col("__ci"))
+        (probed(adcTable(qv, pq).as("__lut"))
+            .select(col("query_id"), col("__qn"), col("__lut"),
+              col("centroid_id"), dot(col("__qv"), c).as("__qc"),
+              dot(c, c).as("__cn2"), adcTable(c, pq).as("__cx")),
+          round((col("__qc") + adcFold(col("__lut"), pq)) / nullif(
+            col("__qn") * sqrt(col("__cn2") +
+              lit(2.0) * adcFold(col("__cx"), pq) +
+              adcFold(typedLit(pq.cc), pq)),
+            lit(0.0)), roundTo))
+    }
+    index.join(broadcast(candidates), Seq("centroid_id"))
       .where(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        adcCosine(pq, roundTo).as("sim"))
+      .select(col("query_id"), col(idCol).as("neighbor_id"), sim.as("sim"))
   }
 
   /** First non-null vector's length — index-build-time probe (one
@@ -1862,12 +1727,11 @@ object Similarity {
     * 5× the ideal cost — this is the skew diagnostic that decides
     * whether to re-train centroids or raise nlist.
     *
-    * Shape: the centroid table is a bounded `limit(nlist)` frame (no
-    * allowlist needed — the assignment's broadcast build side is
-    * provably constant-size), assignment is the one corpus-sized
-    * stage, and everything after is nlist-sized. Empty buckets
-    * densify to zero rows via the left join FROM the centroid table.
-    * Exactness: counts are BIGINT; share and imbalance are one
+    * Shape: the centroid table is a bounded `limit(nlist)` frame,
+    * assignment is the one corpus-sized stage (a projection against
+    * the collected centroids), and everything after is nlist-sized.
+    * Empty buckets densify to zero rows via the left join FROM the
+    * centroid table. Exactness: counts are BIGINT; share and imbalance are one
     * division each.
     */
   def ivfBalanceReport(

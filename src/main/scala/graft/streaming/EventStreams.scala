@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.similarity.IvfCodec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
@@ -1119,12 +1120,11 @@ object EventStreams {
   /** Streaming ANN-index maintenance — the IVF / IVF-PQ analogue of
     * the sketch and fingerprint maintenance sinks, completing the one
     * index family that had batch append ([[graft.similarity.Similarity
-    * .ivfIndexAppend]] / [[graft.similarity.Similarity
-    * .ivfPqIndexAppend]]) but no streaming lifecycle: each micro-batch
-    * of `(id, vector)` rows is assigned to the FIXED broadcast
-    * centroid set (and, with `codebooks`, PQ-encoded against the fixed
-    * codebooks) and landed into the standing index store at
-    * `indexDir`.
+    * .ivfIndexAppend]]) but no streaming lifecycle: each micro-batch
+    * of `(id, vector)` rows becomes index rows for the `codec`
+    * ([[graft.similarity.Similarity.annIndexRows]]: assigned to the
+    * FIXED centroid set and, for a PQ codec, encoded against the fixed
+    * codebooks) and lands in the standing index store at `indexDir`.
     *
     * Store layout and exactly-once: a parquet directory partitioned by
     * `(__batch, centroid_id)`, written with DYNAMIC partition
@@ -1134,8 +1134,7 @@ object EventStreams {
     * idempotent under every redelivery shape: checkpoint replay of a
     * half-processed batch recomputes the same key and rewrites its own
     * partitions with identical content (the index rows are a pure
-    * function of the batch at fixed centroids/codebooks,
-    * [[graft.similarity.Similarity.annIndexRows]]), and a batch
+    * function of the batch at fixed centroids/codebooks), and a batch
     * re-sent through a NEW checkpoint (engine batch ids restart at 0)
     * still lands on its own key instead of clobbering an unrelated
     * batch's partition or duplicating rows. A key collision between
@@ -1157,22 +1156,21 @@ object EventStreams {
     * from the corpus (centroids are part of the index's identity).
     *
     * Readers: [[liveAnnIndex]] + [[graft.similarity.Similarity
-    * .ivfTopK]] (vector store) or
-    * [[graft.similarity.Similarity.ivfPqTopK]] (code store). At fixed
-    * centroids the landed store is row-identical to a from-scratch
+    * .ivfTopK]] with the same `codec`. At fixed centroids and
+    * codebooks the landed store is row-identical to a from-scratch
     * batch build over the union of all batches (spec-pinned), so
     * readers need no streaming-specific handling.
     */
   def annIndexMaintenanceSink(
       vecs: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, indexDir: String, checkpointDir: String,
-      codebooks: Option[DataFrame] = None, roundTo: Int = 4)
+      codec: IvfCodec = IvfCodec.Vectors, roundTo: Int = 4)
     : org.apache.spark.sql.streaming.StreamingQuery = {
     val lock = new Object
     foreachBatchSink(vecs, checkpointDir, outputMode = "append") {
       (batch, _) =>
         lock.synchronized(graft.core.CacheScope.withScope {
-          landAnnBatch(batch, idCol, vecCol, cents, codebooks,
+          landAnnBatch(batch, idCol, vecCol, cents, codec,
             indexDir, roundTo)
         })
     }
@@ -1180,7 +1178,7 @@ object EventStreams {
 
   private[streaming] def landAnnBatch(
       batch: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, codebooks: Option[DataFrame],
+      cents: DataFrame, codec: IvfCodec,
       indexDir: String, roundTo: Int): Unit = {
     // order-independent content key: wrapped sums commute, so the key
     // is invariant to partitioning and delivery order; two independent
@@ -1193,7 +1191,7 @@ object EventStreams {
       val key = f"b${keyRow.getLong(0)}_${keyRow.getLong(1)}%016x" +
         f"_${keyRow.getLong(2)}%016x"
       graft.similarity.Similarity
-        .annIndexRows(batch, idCol, vecCol, cents, codebooks, roundTo)
+        .annIndexRows(batch, idCol, vecCol, cents, codec, roundTo)
         .withColumn("__batch", lit(key))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
@@ -1203,11 +1201,11 @@ object EventStreams {
     }
   }
 
-  /** The standing index over an [[annIndexMaintenanceSink]] store,
-    * in the layout [[graft.similarity.Similarity
-    * .ivfTopK]] (vector store) / [[graft.similarity
-    * .Similarity.ivfPqTopK]] (code store, `codes` column) read —
-    * `__batch` is the store's replay unit, not part of the index.
+  /** The standing index over an [[annIndexMaintenanceSink]] store:
+    * [[graft.similarity.Similarity.annIndexRows]]' layout for the
+    * sink's codec, which [[graft.similarity.Similarity.ivfTopK]] reads
+    * with that codec — `__batch` is the store's replay unit, not part
+    * of the index.
     */
   def liveAnnIndex(
       spark: org.apache.spark.sql.SparkSession,

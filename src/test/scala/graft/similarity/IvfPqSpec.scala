@@ -5,8 +5,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** IVF-PQ: coarse routing over PQ codes ([[Similarity.ivfPqAssignCodes]]
-  * / [[Similarity.ivfPqTopK]] / [[Similarity.pqBuildIvfIndex]]) — the
+/** IVF-PQ: coarse routing over PQ codes ([[Similarity.annIndexRows]]
+  * / [[Similarity.ivfPqTopK]] / [[Similarity.pqBuildIvfIndex]] with
+  * [[IvfCodec.Pq]]) — the
   * scale path that replaces [[Similarity.pqTopK]]'s corpus × queries
   * ADC scoring with Σ(probed bucket sizes).
   */
@@ -31,13 +32,13 @@ class IvfPqSpec extends SparkSpec {
     val books = Similarity.pqTrainCodebooks(d, "vec_id", "embedding",
       m = 4, k = 8, exactMedian = true)
     val cents = Similarity.hashKCentroids(d, "vec_id", "embedding", 6)
-    val index = Similarity.ivfPqAssignCodes(
-      d, "vec_id", "embedding", cents, books)
+    val index = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents, IvfCodec.Pq(books))
     val queries = d.where(col("vec_id") < 5)
     val nprobe = 2
-    val scored = Similarity.ivfPqScoredCandidates(
-      queries, index, books, cents, "vec_id", "embedding", nprobe,
-      roundTo = 4)
+    val scored = Similarity.ivfScoredCandidates(
+      queries, index, cents, "vec_id", "embedding", nprobe,
+      roundTo = 4, IvfCodec.Pq(books))
     val got = scored.count()
 
     // expected: Σ over (query, its nprobe probed buckets) of bucket
@@ -47,8 +48,9 @@ class IvfPqSpec extends SparkSpec {
     val bucketSize = bucketOf.values.groupBy(identity).map {
       case (c, xs) => c -> xs.size
     }
-    val probed = Similarity.ivfPqScoredCandidates(
-      queries, index, books, cents, "vec_id", "embedding", nprobe, 4)
+    val probed = Similarity.ivfScoredCandidates(
+      queries, index, cents, "vec_id", "embedding", nprobe, 4,
+      IvfCodec.Pq(books))
     // recompute the probe sets independently with the public pieces
     val probeSets = Similarity.ivfTopK(queries,
         Similarity.annIndexRows(d, "vec_id", "embedding", cents), cents,
@@ -73,8 +75,8 @@ class IvfPqSpec extends SparkSpec {
       m = 4, k = 8, exactMedian = true)
     val cents = Similarity.hashKCentroids(d, "vec_id", "embedding", 5)
     val enc = Similarity.pqEncode(d, "vec_id", "embedding", books)
-    val index = Similarity.ivfPqAssignCodes(
-      d, "vec_id", "embedding", cents, books)
+    val index = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents, IvfCodec.Pq(books))
     val q = d.where(col("vec_id") < 4)
     def rows(x: org.apache.spark.sql.DataFrame) =
       x.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
@@ -92,11 +94,12 @@ class IvfPqSpec extends SparkSpec {
       m = 4, k = 8, exactMedian = true)
     val cents = Similarity.hashKCentroids(d, "vec_id", "embedding", 5)
     val enc = Similarity.pqEncode(d, "vec_id", "embedding", books)
-    val index = Similarity.ivfPqAssignCodes(
-      d, "vec_id", "embedding", cents, books)
+    val index = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents, IvfCodec.Pq(books))
     val q = d.where(col("vec_id") < 5)
-    val routed = Similarity.ivfPqScoredCandidates(
-        q, index, books, cents, "vec_id", "embedding", nprobe = 2, 4)
+    val routed = Similarity.ivfScoredCandidates(
+        q, index, cents, "vec_id", "embedding", nprobe = 2, 4,
+        IvfCodec.Pq(books))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2))
       .toMap
     val all = Similarity.pqTopK(q, enc, books, "vec_id", "embedding",
@@ -123,8 +126,8 @@ class IvfPqSpec extends SparkSpec {
     val books2 = Similarity.pqTrainCodebooks(d, "vec_id", "embedding",
       m = 4, k = 16, iters = 2, exactMedian = true)
     val cents2 = Similarity.hashKCentroids(d, "vec_id", "embedding", 6)
-    val index2 = Similarity.ivfPqAssignCodes(
-      d, "vec_id", "embedding", cents2, books2)
+    val index2 = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents2, IvfCodec.Pq(books2))
     def pairsI(x: org.apache.spark.sql.DataFrame) =
       x.select("query_id", "neighbor_id").collect()
         .map(r => (r.getInt(0), r.getInt(1))).toSet
@@ -146,8 +149,8 @@ class IvfPqSpec extends SparkSpec {
     val books = Similarity.pqTrainCodebooks(e, "vec_id", "embedding",
       m = 4, k = 16, iters = 2, exactMedian = true)
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
-    val index = Similarity.ivfPqAssignCodes(
-      e, "vec_id", "embedding", cents, books)
+    val index = Similarity.annIndexRows(
+      e, "vec_id", "embedding", cents, IvfCodec.Pq(books))
     def pairsL(x: org.apache.spark.sql.DataFrame) =
       x.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -174,7 +177,8 @@ class IvfPqSpec extends SparkSpec {
     val cents = Similarity.hashKCentroids(e, "vec_id", "embedding", 16)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_plan").toString + "/idx"
-    Similarity.ivfPqAssignCodes(e, "vec_id", "embedding", cents, books)
+    Similarity.annIndexRows(e, "vec_id", "embedding", cents,
+        IvfCodec.Pq(books))
       .write.parquet(dir)
     val out = Similarity.ivfPqTopK(e.where(col("vec_id") < 10),
       spark.read.parquet(dir), books, cents, "vec_id", "embedding",
@@ -218,41 +222,8 @@ class IvfPqSpec extends SparkSpec {
     }
   }
 
-  test("ivfPqIndexAppend at fixed centroids and codebooks equals a " +
-      "from-scratch rebuild over the unioned corpus, and search over " +
-      "the appended table sees the new vectors") {
-    val base = clustered(60, 16, 4, seed = 27)
-    val batch = df(schema, (100 until 120).map { i =>
-      val rng = new scala.util.Random(i)
-      Row(i, Seq.fill(16)(rng.nextDouble() * 2 - 1))
-    })
-    val books = Similarity.pqTrainCodebooks(base, "vec_id", "embedding",
-      m = 4, k = 8, exactMedian = true)
-    val cents = Similarity.hashKCentroids(base, "vec_id", "embedding", 4)
-    try {
-      Similarity.pqBuildIvfIndex(base, "vec_id", "embedding", cents,
-        books, "ivfpq_append_spec", numBuckets = 2)
-      val appended = Similarity.ivfPqIndexAppend(batch, "vec_id",
-        "embedding", cents, books, "ivfpq_append_spec", numBuckets = 2)
-      assert(appended == 20)
-      Similarity.pqBuildIvfIndex(base.unionByName(batch), "vec_id",
-        "embedding", cents, books, "ivfpq_rebuild_spec", numBuckets = 2)
-      def rows(t: String) = spark.table(t).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Int](2))).toSet
-      assert(rows("ivfpq_append_spec") == rows("ivfpq_rebuild_spec"))
-      val q = batch.where(col("vec_id") === 100)
-      val got = Similarity.ivfPqTopK(q, spark.table("ivfpq_append_spec"),
-          books, cents, "vec_id", "embedding", k = 5, nprobe = 4)
-        .select("neighbor_id").collect().map(_.getInt(0))
-      assert(got.nonEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS ivfpq_append_spec")
-      spark.sql("DROP TABLE IF EXISTS ivfpq_rebuild_spec")
-    }
-  }
-
   test("pqBuildIvfIndex roundtrip: the bucketed table holds exactly " +
-      "ivfPqAssignCodes' rows and searching over it equals the direct " +
+      "annIndexRows' rows and searching over it equals the direct " +
       "path") {
     val d = clustered(80, 16, 4, seed = 19)
     val books = Similarity.pqTrainCodebooks(d, "vec_id", "embedding",
@@ -264,8 +235,8 @@ class IvfPqSpec extends SparkSpec {
         cents, books, "ivfpq_idx_spec", numBuckets = 4)
       assert(n == 80)
       def key(r: Row) = (r.getInt(0), r.getInt(1), r.getSeq[Int](2))
-      val direct = Similarity.ivfPqAssignCodes(
-          d, "vec_id", "embedding", cents, books)
+      val direct = Similarity.annIndexRows(
+          d, "vec_id", "embedding", cents, IvfCodec.Pq(books))
         .collect().map(key).toSet
       val stored = spark.table("ivfpq_idx_spec").collect().map(key).toSet
       assert(stored == direct)
@@ -275,8 +246,8 @@ class IvfPqSpec extends SparkSpec {
         rows(Similarity.ivfPqTopK(q, spark.table("ivfpq_idx_spec"),
           books, cents, "vec_id", "embedding", k = 5, nprobe = 2)) ==
         rows(Similarity.ivfPqTopK(q,
-          Similarity.ivfPqAssignCodes(d, "vec_id", "embedding", cents,
-            books),
+          Similarity.annIndexRows(d, "vec_id", "embedding", cents,
+            IvfCodec.Pq(books)),
           books, cents, "vec_id", "embedding", k = 5, nprobe = 2)))
     } finally spark.sql("DROP TABLE IF EXISTS ivfpq_idx_spec")
   }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Residual IVF-PQ ([[Similarity.ivfResiduals]] /
-  * [[Similarity.ivfRpqTrainCodebooks]] / [[Similarity.ivfRpqAssignCodes]]
-  * / [[Similarity.ivfRpqTopK]]): PQ codebooks trained on and applied to
+  * [[Similarity.ivfRpqTrainCodebooks]], then [[Similarity.annIndexRows]]
+  * / [[Similarity.ivfTopK]] with [[IvfCodec.ResidualPq]]): PQ codebooks
+  * trained on and applied to
   * the residual x − c against the assigned coarse centroid — the
   * published IVF-ADC construction, which spends the code budget on the
   * LOCAL displacement inside a Voronoi cell instead of absolute
@@ -34,8 +35,8 @@ class IvfRpqSpec extends SparkSpec {
     val cents = Similarity.hashKCentroids(d, "vec_id", "embedding", nlist)
     val books = Similarity.ivfRpqTrainCodebooks(d, "vec_id", "embedding",
       cents, m = m, k = k, exactMedian = true)
-    val index = Similarity.ivfRpqAssignCodes(
-      d, "vec_id", "embedding", cents, books)
+    val index = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents, IvfCodec.ResidualPq(books))
     (cents, books, index)
   }
 
@@ -70,14 +71,15 @@ class IvfRpqSpec extends SparkSpec {
     }
   }
 
-  test("ADC decomposition is exact: ivfRpqTopK similarity equals the " +
+  test("ADC decomposition is exact: the residual ivfTopK similarity " +
+      "equals the " +
       "cosine against the reconstructed c + r̂ to 1e-9") {
     val d = clustered(40, 16, 4, seed = 5)
     val (cents, books, index) = build(d, nlist = 4)
     // nprobe = nlist: every non-self pair in a probed bucket is scored
-    val adc = Similarity.ivfRpqTopK(d.where(col("vec_id") < 3), index,
-        books, cents, "vec_id", "embedding", k = 39, nprobe = 4,
-        roundTo = 9)
+    val adc = Similarity.ivfTopK(d.where(col("vec_id") < 3), index,
+        cents, "vec_id", "embedding", k = 39, nprobe = 4, roundTo = 9,
+        codec = IvfCodec.ResidualPq(books))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val rhat = Similarity.pqReconstruct(
@@ -109,9 +111,9 @@ class IvfRpqSpec extends SparkSpec {
     val (cents, books, index) = build(d, nlist = 6)
     val queries = d.where(col("vec_id") < 5)
     val nprobe = 2
-    val got = Similarity.ivfRpqScoredCandidates(
-      queries, index, books, cents, "vec_id", "embedding", nprobe,
-      roundTo = 4).count()
+    val got = Similarity.ivfScoredCandidates(
+      queries, index, cents, "vec_id", "embedding", nprobe,
+      roundTo = 4, IvfCodec.ResidualPq(books)).count()
     // independent replay of routing + bucket sizes on the driver
     val cm = cents.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toIndexedSeq).toMap
@@ -145,12 +147,14 @@ class IvfRpqSpec extends SparkSpec {
     val d = clustered(100, 16, 5, seed = 7)
     val (cents, books, index) = build(d, nlist = 5)
     val q = d.where(col("vec_id") < 5)
-    val routed = Similarity.ivfRpqScoredCandidates(
-        q, index, books, cents, "vec_id", "embedding", nprobe = 2, 4)
+    val routed = Similarity.ivfScoredCandidates(
+        q, index, cents, "vec_id", "embedding", nprobe = 2, 4,
+        IvfCodec.ResidualPq(books))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2))
       .toMap
-    val full = Similarity.ivfRpqScoredCandidates(
-        q, index, books, cents, "vec_id", "embedding", nprobe = 5, 4)
+    val full = Similarity.ivfScoredCandidates(
+        q, index, cents, "vec_id", "embedding", nprobe = 5, 4,
+        IvfCodec.ResidualPq(books))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2))
       .toMap
     assert(routed.nonEmpty && routed.size < full.size)
@@ -182,17 +186,18 @@ class IvfRpqSpec extends SparkSpec {
     // raw-vector IVF-PQ at the same budget
     val rawBooks = Similarity.pqTrainCodebooks(d, "vec_id", "embedding",
       m = 4, k = 8, exactMedian = true)
-    val rawIdx = Similarity.ivfPqAssignCodes(
-      d, "vec_id", "embedding", cents, rawBooks)
+    val rawIdx = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents, IvfCodec.Pq(rawBooks))
     val raw = pairs(Similarity.ivfPqTopK(qq, rawIdx, rawBooks, cents,
       "vec_id", "embedding", k = 10, nprobe = nlist))
     // residual IVF-PQ
     val resBooks = Similarity.ivfRpqTrainCodebooks(d, "vec_id",
       "embedding", cents, m = 4, k = 8, exactMedian = true)
-    val resIdx = Similarity.ivfRpqAssignCodes(
-      d, "vec_id", "embedding", cents, resBooks)
-    val res = pairs(Similarity.ivfRpqTopK(qq, resIdx, resBooks, cents,
-      "vec_id", "embedding", k = 10, nprobe = nlist))
+    val resIdx = Similarity.annIndexRows(
+      d, "vec_id", "embedding", cents, IvfCodec.ResidualPq(resBooks))
+    val res = pairs(Similarity.ivfTopK(qq, resIdx, cents, "vec_id",
+      "embedding", k = 10, nprobe = nlist,
+      codec = IvfCodec.ResidualPq(resBooks)))
     // reconstruction error: mean ‖x − x̂‖² over the corpus
     def mse(xhat: org.apache.spark.sql.DataFrame): Double =
       d.join(xhat, Seq("vec_id"))
@@ -221,47 +226,13 @@ class IvfRpqSpec extends SparkSpec {
     assert(resRecall >= 0.5, s"residual recall $resRecall")
   }
 
-  test("ivfRpqIndexAppend at fixed centroids and codebooks equals a " +
-      "from-scratch rebuild over the unioned corpus, and search over " +
-      "the appended table sees the new vectors") {
-    val base = clustered(60, 16, 4, seed = 27)
-    val batch = df(schema, (100 until 120).map { i =>
-      val rng = new scala.util.Random(i)
-      Row(i, Seq.fill(16)(rng.nextDouble() * 2 - 1))
-    })
-    val cents = Similarity.hashKCentroids(base, "vec_id", "embedding", 4)
-    val books = Similarity.ivfRpqTrainCodebooks(base, "vec_id",
-      "embedding", cents, m = 4, k = 8, exactMedian = true)
-    try {
-      Similarity.rpqBuildIvfIndex(base, "vec_id", "embedding", cents,
-        books, "ivfrpq_append_spec", numBuckets = 2)
-      val appended = Similarity.ivfRpqIndexAppend(batch, "vec_id",
-        "embedding", cents, books, "ivfrpq_append_spec", numBuckets = 2)
-      assert(appended == 20)
-      Similarity.rpqBuildIvfIndex(base.unionByName(batch), "vec_id",
-        "embedding", cents, books, "ivfrpq_rebuild_spec", numBuckets = 2)
-      def rows(t: String) = spark.table(t).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Int](2))).toSet
-      assert(rows("ivfrpq_append_spec") == rows("ivfrpq_rebuild_spec"))
-      val q = batch.where(col("vec_id") === 100)
-      val got = Similarity.ivfRpqTopK(q,
-          spark.table("ivfrpq_append_spec"), books, cents,
-          "vec_id", "embedding", k = 5, nprobe = 4)
-        .select("neighbor_id").collect().map(_.getInt(0))
-      assert(got.nonEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS ivfrpq_append_spec")
-      spark.sql("DROP TABLE IF EXISTS ivfrpq_rebuild_spec")
-    }
-  }
-
   test("index and codes are deterministic under repartitioning") {
     val d = clustered(80, 16, 4, seed = 19)
     val (cents, books, index) = build(d, nlist = 4)
     def rows(x: org.apache.spark.sql.DataFrame) = x.collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Int](2).toSeq)).toSet
-    val again = Similarity.ivfRpqAssignCodes(
-      d.repartition(7), "vec_id", "embedding", cents, books)
+    val again = Similarity.annIndexRows(d.repartition(7), "vec_id",
+      "embedding", cents, IvfCodec.ResidualPq(books))
     assert(rows(again) == rows(index))
   }
 }

@@ -1,17 +1,18 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.similarity.Similarity
+import graft.similarity.{IvfCodec, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** [[EventStreams.annIndexMaintenanceSink]] — the ANN index's
   * streaming lifecycle: the landed store equals a from-scratch batch
-  * build over the union of all arrived batches (vector AND PQ-code
-  * variants), search over the live store equals search over the fresh
-  * index, replaying a landed batch leaves the store unchanged, and a
-  * restarted query keeps extending the same store.
+  * build over the union of all arrived batches (for every
+  * [[graft.similarity.IvfCodec]]), search over the live store equals
+  * search over the fresh index, replaying a landed batch leaves the
+  * store unchanged, and a restarted query keeps extending the same
+  * store.
   */
 class AnnIndexSinkSpec extends SparkSpec {
 
@@ -80,7 +81,7 @@ class AnnIndexSinkSpec extends SparkSpec {
     def stored = norml(EventStreams.liveAnnIndex(spark, store))
     val before = stored
     EventStreams.landAnnBatch(df(b1), "vec_id", "embedding",
-      cents.localCheckpoint(true), None, store, 4)
+      cents.localCheckpoint(true), IvfCodec.Vectors, store, 4)
     assert(stored === before)
 
     // restart through a NEW checkpoint (engine batch ids restart at
@@ -98,42 +99,47 @@ class AnnIndexSinkSpec extends SparkSpec {
       df(b1 ++ b2 ++ b3), "vec_id", "embedding", cents)))
   }
 
-  test("PQ-code store: landed union equals a from-scratch encode at " +
-      "fixed centroids and codebooks") {
+  test("PQ-code stores: landed union equals a from-scratch encode at " +
+      "fixed centroids and codebooks, raw and residual") {
     implicit val sql = spark.sqlContext
-    val store = tmp("graft_annpq_store") + "/ivfpq"
     val c = cents.localCheckpoint(true)
-    val cb = Similarity.pqTrainCodebooks(df(b1), "vec_id", "embedding",
+    val raw = Similarity.pqTrainCodebooks(df(b1), "vec_id", "embedding",
       m = 2, k = 2, iters = 1).localCheckpoint(true)
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = EventStreams.annIndexMaintenanceSink(
-      in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      c, store, tmp("graft_annpq_ckpt"), codebooks = Some(cb))
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    def codeRows(d: DataFrame) = d
-      .select(col("vec_id"), col("centroid_id").cast("long"),
-        col("codes"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
-      .toSet
-    val live = EventStreams.liveAnnIndex(spark, store)
-    val fresh = Similarity.annIndexRows(
-      df(b1 ++ b2), "vec_id", "embedding", c, Some(cb))
-    assert(codeRows(live) === codeRows(fresh))
-    // and the ADC search path accepts the live store directly
-    val hits = Similarity.ivfPqTopK(df(b2), live, cb, c,
-      "vec_id", "embedding", k = 2, nprobe = 2)
-    assert(hits.count() > 0)
+    val res = Similarity.ivfRpqTrainCodebooks(df(b1), "vec_id",
+      "embedding", c, m = 2, k = 2, iters = 1).localCheckpoint(true)
+    for (codec <- Seq(IvfCodec.Pq(raw), IvfCodec.ResidualPq(res))) {
+      val store = tmp("graft_annpq_store") + "/ivfpq"
+      val in = MemoryStream[(Long, Array[Float])]
+      val q = EventStreams.annIndexMaintenanceSink(
+        in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+        c, store, tmp("graft_annpq_ckpt"), codec = codec)
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+      } finally q.stop()
+      def codeRows(d: DataFrame) = d
+        .select(col("vec_id"), col("centroid_id").cast("long"),
+          col("codes"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
+        .toSet
+      val live = EventStreams.liveAnnIndex(spark, store)
+      val fresh = Similarity.annIndexRows(
+        df(b1 ++ b2), "vec_id", "embedding", c, codec)
+      assert(codeRows(live) === codeRows(fresh), codec)
+      assert(codeRows(live).size == 6, codec)
+      // and the ADC search path accepts the live store directly
+      val hits = Similarity.ivfTopK(df(b2), live, c,
+        "vec_id", "embedding", k = 2, nprobe = 2, codec = codec)
+      assert(hits.count() > 0, codec)
+    }
   }
 
   test("an empty micro-batch lands nothing and creates no partition") {
     val store = tmp("graft_ann_empty") + "/ivf"
     EventStreams.landAnnBatch(
       df(b1).limit(0), "vec_id", "embedding",
-      cents.localCheckpoint(true), None, store, 4)
+      cents.localCheckpoint(true), IvfCodec.Vectors, store, 4)
     assert(!new java.io.File(store).exists())
   }
 }

@@ -16,11 +16,21 @@ they arrive.
 Afterwards it runs `compare.py check PARENT_OUT CHANGE_OUT` from the
 change checkout and prints, for every workload and end-to-end metric of
 BENCHMARK.json, on how many seeds the change beat the parent (ties count
-for neither side). The exit status is that of `compare.py check`.
+for neither side). Then, for every workload and every BENCHMARK.json
+metric the runs carry, it prints each side's median and quartiles
+(`statistics.quantiles(n=4)`, as `compare.py` uses) and flags `~` where
+the medians differ by less than the parent's quartile distance: there a
+set cannot tell the change from the parent. The exit status is that of
+`compare.py check`.
+
+    python3 tools/bench_pair.py --report PARENT_OUT CHANGE_OUT
+
+prints the same tables for two sets made earlier, without running.
 """
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -70,7 +80,46 @@ def pair_wins(spec, parent, change):
     return rows
 
 
+def spread_rows(spec, parent, change):
+    """Per (workload, metric) on both sides: parent and change quartiles,
+    and whether the medians differ by less than the parent's quartile
+    distance."""
+    rows = []
+    for w in (x["name"] for x in spec["workloads"]):
+        for m in spec["end_to_end"] + spec["per_layer"]:
+            name = m["name"]
+            vals = [[r["metrics"][name]["value"] for r in side
+                     if r["workload"] == w and name in r["metrics"]]
+                    for side in (parent, change)]
+            if min(len(v) for v in vals) < 2:
+                continue
+            p, c = (statistics.quantiles(v, n=4) for v in vals)
+            rows.append((w, name, p, c, abs(c[1] - p[1]) < p[2] - p[0]))
+    return rows
+
+
+def report(spec, parent, change):
+    print(f"{'workload':14s} {'metric':16s} change better on")
+    for w, name, wins, pairs in pair_wins(spec, parent, change):
+        if pairs:
+            print(f"{w:14s} {name:16s} {wins} of {pairs} seeds")
+    print(f"\n{'workload':14s} {'metric':34s} {'parent q1 / median / q3':>32s}"
+          f" {'change q1 / median / q3':>32s}")
+    for w, name, p, c, within in spread_rows(spec, parent, change):
+        fmt = " / ".join
+        print(f"{w:14s} {name:34s} {fmt(f'{x:.4g}' for x in p):>32s}"
+              f" {fmt(f'{x:.4g}' for x in c):>32s}"
+              f"{'  ~' if within else ''}")
+    print("~ : medians differ by less than the parent's quartile distance")
+
+
 def main():
+    if sys.argv[1:2] == ["--report"]:
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               "..", "BENCHMARK.json")) as f:
+            spec = json.load(f)
+        report(spec, load(sys.argv[2]), load(sys.argv[3]))
+        return 0
     ap = argparse.ArgumentParser()
     ap.add_argument("parent_dir")
     ap.add_argument("change_dir")
@@ -93,11 +142,7 @@ def main():
          sides[1][1]], cwd=sides[1][0]).returncode
     with open(os.path.join(sides[1][0], "BENCHMARK.json")) as f:
         spec = json.load(f)
-    print(f"{'workload':14s} {'metric':16s} change better on")
-    for w, name, wins, pairs in pair_wins(spec, load(sides[0][1]),
-                                          load(sides[1][1])):
-        if pairs:
-            print(f"{w:14s} {name:16s} {wins} of {pairs} seeds")
+    report(spec, load(sides[0][1]), load(sides[1][1]))
     return status
 
 
